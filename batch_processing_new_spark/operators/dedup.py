@@ -328,7 +328,9 @@ def _verify_candidates(
                 " / size(array_union(toks_a, toks_b))"
             ),
         )
-        .where(F.expr(f"_j >= {threshold!r}D"))
+        # float(): the literal is built from repr, which for a numpy or
+        # Decimal threshold is not SQL (``np.float64(0.5)`` under numpy 2)
+        .where(F.expr(f"_j >= {float(threshold)!r}D"))
         .selectExpr("id_a", "id_b", "round(_j, 6) AS jaccard")
     )
 

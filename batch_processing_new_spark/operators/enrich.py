@@ -13,9 +13,14 @@ Reference semantics being reproduced (SURVEY.md §2A, cited to
   (test.py:116,163-165,200)
 
 Spark mapping: ``df.mapInPandas`` — each Arrow batch is processed by an
-asyncio loop with a semaphore-capped client pool, so the concurrency
-topology becomes ``executors x cores x per-task in-flight cap`` instead of
-the reference's fixed 10x20 pools. The enrichment result is a typed struct
+asyncio loop with a semaphore-capped client pool: Spark tasks are the
+reference's outer pool of batches, the semaphore its inner per-batch
+pool. Calls in flight are ``min(width, slots) x concurrency``, where
+width is the input's partition count and slots are executors x cores.
+``enrich()`` keeps its input's partitioning; the enrichment pipeline
+(``plans/pipeline.py``, see its module docstring) sets the width to the
+reference's 1,000-row batches, ``ceil(head_rows / 1000)``, because a
+small CSV arrives as one split. The enrichment result is a typed struct
 (response, error, attempts, latency_ms) rather than an in-band sentinel;
 ``response`` keeps the sentinel-compatible value for parity.
 

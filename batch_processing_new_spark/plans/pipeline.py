@@ -3,9 +3,19 @@
 Mirrors ops 1-15 of SURVEY.md §2A (reference test.py:141-285):
 
   job spec -> CSV scan -> ingest-order _row_id -> head(max_rows) ->
-  per-row LLM map -> append Response -> passthrough tail (empty Response)
-  -> order-restoring sort -> single-file CSV sink -> error report ->
-  completion webhook.
+  spread over 1,000-row batches -> per-row LLM map -> append Response ->
+  passthrough tail (empty Response) -> order-restoring sort ->
+  single-file CSV sink -> error report -> completion webhook.
+
+Enrich width: the head runs as ``ceil(head_rows / 1000)`` Spark tasks
+(``head_rows = min(max_rows, input rows)``), the reference's 1,000-row
+batches (test.py:163,193-194; SURVEY.md §2A row 8). Spark reads any CSV
+under its file open-cost floor (4 MB) as ONE split, so without the
+round-robin ``repartition`` the whole head would run in one task with
+at most ``EnrichConfig.concurrency`` calls in flight. Tasks run in waves
+over the task slots, so the calls in flight are
+``min(width, slots) x concurrency``. Heads of 1,000 rows or fewer are
+not repartitioned: a shuffle would only add cost to a one-batch job.
 
 Parity contract (SURVEY.md §2A.1): output rows == input rows, output
 order == input order, schema == input + 'Response', rows >= max_rows get
@@ -16,6 +26,7 @@ error report carries (error_count, 1-based error_indexes).
 from __future__ import annotations
 
 import json
+import logging
 import urllib.request
 from dataclasses import dataclass, field
 
@@ -28,10 +39,17 @@ from batch_processing_new_spark.operators.enrich import (
     enrich,
 )
 from batch_processing_new_spark.sinks.writers import write_single_csv
-from batch_processing_new_spark.sources.readers import read_csv, with_ingest_row_id
+from batch_processing_new_spark.sources.readers import (
+    read_csv,
+    with_ingest_row_id_and_count,
+)
 from batch_processing_new_spark.sources.storage import apply_s3a_conf, map_url
 
 ROW_ID = "_row_id"
+#: Rows per enrich task: the reference's batch size (test.py:163).
+BATCH_ROWS = 1000
+
+log = logging.getLogger(__name__)
 
 
 @dataclass
@@ -115,12 +133,17 @@ def run_enrichment_pipeline(
             raw = read_csv(spark, apply_s3a_conf(spark, src))
     input_col = raw.columns[spec.column_index]  # positional (test.py:151,86)
 
-    with_id = with_ingest_row_id(raw, ROW_ID)
+    with_id, total_rows = with_ingest_row_id_and_count(raw, ROW_ID)
 
     # LIMIT with a stable complement (ops 3 + 12): where on _row_id, not
     # df.limit(n) — the tail must be exactly the non-enriched rows.
     head = with_id.where(F.col(ROW_ID) < spec.max_rows)
     tail = with_id.where(F.col(ROW_ID) >= spec.max_rows)
+    width = -(-min(spec.max_rows, total_rows) // BATCH_ROWS)
+    if width > 1:
+        # round-robin: equal batches whatever the id layout; the sort
+        # below restores ingest order
+        head = head.repartition(width)
 
     enriched_head = enrich(head, input_col, cfg, response_col="Response")
     passthrough_tail = tail.withColumn("Response", F.lit(""))
@@ -153,8 +176,6 @@ def run_enrichment_pipeline(
             output_path = write_single_csv(
                 ordered.drop(ROW_ID), f"{output_dir}/{spec.file_name}_final.csv"
             )
-        row_count = out.count()
-
         # op 13: error aggregation — filter + count + collect of 1-based
         # indexes (reference count_errors_in_csv, test.py:40-54)
         errs = (
@@ -168,7 +189,7 @@ def run_enrichment_pipeline(
 
     result = PipelineResult(
         output_path=output_path,
-        row_count=row_count,
+        row_count=total_rows,
         error_count=len(error_indexes),
         error_indexes=error_indexes,
     )
@@ -194,4 +215,8 @@ def _notify_webhook(spec: PipelineSpec, result: PipelineResult) -> None:
         )
         urllib.request.urlopen(req, timeout=200)
     except Exception as exc:  # noqa: BLE001
-        print(f"webhook notify failed (swallowed): {exc}")
+        log.warning(
+            "webhook notify failed (swallowed): request_id=%s: %s",
+            spec.request_id,
+            exc,
+        )

@@ -142,7 +142,17 @@ def read_csv(
 
 
 def with_ingest_row_id(df: DataFrame, col_name: str = "_row_id") -> DataFrame:
-    """Mint a contiguous 0-based ingest-order row id.
+    """Mint a contiguous 0-based ingest-order row id (see
+    ``with_ingest_row_id_and_count``, which also returns the row total)."""
+    return with_ingest_row_id_and_count(df, col_name)[0]
+
+
+def with_ingest_row_id_and_count(
+    df: DataFrame, col_name: str = "_row_id"
+) -> tuple[DataFrame, int]:
+    """Mint a contiguous 0-based ingest-order row id; also return the
+    input's row total, which the per-partition counts below already
+    carry to the driver (no extra Spark job).
 
     Reference parity: the pandas integer index is the reference's row
     identity and its output-order contract (test.py:103, test.py:221).
@@ -198,7 +208,7 @@ def with_ingest_row_id(df: DataFrame, col_name: str = "_row_id") -> DataFrame:
         # writers — must not see nullability diverge on emptiness)
         return pinned.drop(pid_col).withColumn(
             col_name, F.lit(0).cast(T.LongType())
-        ).where(F.lit(False))
+        ).where(F.lit(False)), 0
     off = spark.createDataFrame(
         offsets,
         T.StructType(
@@ -223,7 +233,7 @@ def with_ingest_row_id(df: DataFrame, col_name: str = "_row_id") -> DataFrame:
             col_name, (F.col(off_col) + F.col(idx_col)).cast(T.LongType())
         )
         .drop(pid_col, off_col, idx_col)
-    )
+    ), acc
 
 
 def read_jsonl(

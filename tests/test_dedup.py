@@ -235,3 +235,26 @@ def test_md5_lsh_oracle_twin_recall_and_precision(spark):
     if strong:
         hit = len(strong & got) / len(strong)
         assert hit >= 0.9
+
+
+def test_lsh_threshold_accepts_numpy_and_decimal(spark):
+    """The verify threshold is spliced into SQL: a numpy or Decimal
+    threshold must give exactly the pairs of the equal Python float."""
+    from decimal import Decimal
+
+    import numpy as np
+
+    from tests.conftest import SF_SMOKE
+
+    docs = load_table(spark, SF_SMOKE, "documents")
+
+    def pairs(threshold):
+        return sorted(
+            (r.id_a, r.id_b, r.jaccard)
+            for r in minhash_lsh_pairs(docs, threshold=threshold).collect()
+        )
+
+    want = pairs(0.5)
+    assert want, "fixture should produce pairs at 0.5"
+    assert pairs(np.float64(0.5)) == want
+    assert pairs(Decimal("0.5")) == want

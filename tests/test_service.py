@@ -1,12 +1,18 @@
 """HTTP ingest service parity (reference op 1): 400 on missing key,
-500 on unreadable source, full pipeline on a good job spec."""
+500 on unreadable source, full pipeline on a good job spec, and
+concurrent first requests shipping the package once."""
 
 from __future__ import annotations
 
 import csv
 import json
+import os
+import sys
+import tempfile
+import threading
 import urllib.error
 import urllib.request
+import zipfile
 
 import pytest
 
@@ -134,3 +140,41 @@ def test_bad_value_returns_400(server):
     except urllib.error.HTTPError as e:
         assert e.code == 400
         assert "Bad value" in e.read().decode()
+
+
+def test_concurrent_first_ship_adds_package_once(spark, tmp_path, monkeypatch):
+    """Concurrent first requests on a context (service handler threads)
+    write the package zip and call addPyFile exactly once."""
+    from batch_processing_new_spark import shipping
+
+    sc = spark.sparkContext
+    calls: list[str] = []
+    monkeypatch.setattr(shipping, "_SHIPPED_CONTEXTS", set())
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))  # a fresh zip
+    monkeypatch.setattr(sc, "addPyFile", calls.append)
+    start = threading.Barrier(8)
+    errors: list[BaseException] = []
+
+    def first_request() -> None:
+        try:
+            start.wait(timeout=30)
+            shipping.ensure_package_on_executors(spark)
+        except BaseException as exc:  # noqa: BLE001 — reported below
+            errors.append(exc)
+
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        threads = [threading.Thread(target=first_request) for _ in range(8)]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=60)
+    finally:
+        sys.setswitchinterval(interval)
+    assert not any(t.is_alive() for t in threads)
+    assert errors == []
+    assert len(calls) == 1
+    assert os.listdir(tmp_path) == [os.path.basename(calls[0])]
+    with zipfile.ZipFile(calls[0]) as zf:
+        assert "batch_processing_new_spark/shipping.py" in zf.namelist()
