@@ -17,12 +17,16 @@ asyncio loop with a semaphore-capped client pool: Spark tasks are the
 reference's outer pool of batches, the semaphore its inner per-batch
 pool. Calls in flight are ``min(width, slots) x concurrency``, where
 width is the input's partition count and slots are executors x cores.
-``enrich()`` keeps its input's partitioning; the enrichment pipeline
-(``plans/pipeline.py``, see its module docstring) sets the width to the
-reference's 1,000-row batches, ``ceil(head_rows / 1000)``, because a
-small CSV arrives as one split. The enrichment result is a typed struct
-(response, error, attempts, latency_ms) rather than an in-band sentinel;
-``response`` keeps the sentinel-compatible value for parity.
+``enrich()`` keeps its input's partitioning and call cap; the enrichment
+pipeline (``plans/pipeline.py``, see its module docstring), whose small
+CSV arrives as one split, sets both: width ``min(batches, slots)`` over
+the reference's ``batches = ceil(head_rows / 1000)``, and a per-task cap
+that keeps ``min(batches, 10) x concurrency`` calls in flight when the
+batches outnumber the slots. The dedupe path spreads the distinct
+inputs over ``defaultParallelism`` tasks. The enrichment result is a
+typed struct (response, error, attempts, latency_ms) rather than an
+in-band sentinel; ``response`` keeps the sentinel-compatible value for
+parity.
 
 Scale notes:
 - The operator is an optimizer barrier by construction (Python UDF); keep
@@ -413,7 +417,14 @@ def _enrich_deduped(
     driver's broadcast limit — violating the never-abort contract.
     """
     base_cfg = replace(cfg, dedupe_inputs=False)
-    distinct = df.select(F.col(input_col).alias("_enrich_key")).distinct()
+    # explicit width: AQE would coalesce a bare distinct()'s small
+    # shuffle to ONE enrich task, but never an explicit partition count;
+    # the aggregate reuses this hash partitioning, so it is one exchange
+    distinct = (
+        df.select(F.col(input_col).alias("_enrich_key"))
+        .repartition(df.sparkSession.sparkContext.defaultParallelism, "_enrich_key")
+        .distinct()
+    )
     enriched_map = enrich(
         distinct, "_enrich_key", base_cfg, response_col, with_result_struct=True
     )

@@ -7,15 +7,20 @@ Mirrors ops 1-15 of SURVEY.md §2A (reference test.py:141-285):
   passthrough tail (empty Response) -> order-restoring sort ->
   single-file CSV sink -> error report -> completion webhook.
 
-Enrich width: the head runs as ``ceil(head_rows / 1000)`` Spark tasks
-(``head_rows = min(max_rows, input rows)``), the reference's 1,000-row
-batches (test.py:163,193-194; SURVEY.md §2A row 8). Spark reads any CSV
-under its file open-cost floor (4 MB) as ONE split, so without the
-round-robin ``repartition`` the whole head would run in one task with
-at most ``EnrichConfig.concurrency`` calls in flight. Tasks run in waves
-over the task slots, so the calls in flight are
-``min(width, slots) x concurrency``. Heads of 1,000 rows or fewer are
-not repartitioned: a shuffle would only add cost to a one-batch job.
+Enrich topology: the head holds ``batches = ceil(head_rows / 1000)`` of
+the reference's 1,000-row batches (``head_rows = min(max_rows, input
+rows)``; test.py:163,193-194), of which the reference runs up to 10 at
+once with 20 calls in flight each (test.py:116,200; SURVEY.md §2A
+row 8). Spark reads any CSV under its file open-cost floor (4 MB) as ONE
+split, so the head is spread by a round-robin ``repartition(width)``
+with ``width = min(batches, slots)``: batches beyond the task slots are
+folded onto the first wave's tasks instead of queueing in a second one.
+Each task then gets a call cap of
+``max(concurrency, ceil(min(batches, 10) x concurrency / width))``, so
+the job keeps the reference's ``min(batches, 10) x concurrency`` calls in
+flight when slots are short, and exactly ``width x concurrency`` when
+they are not. Heads of 1,000 rows or fewer are not repartitioned: a
+shuffle would only add cost to a one-batch job.
 
 Parity contract (SURVEY.md §2A.1): output rows == input rows, output
 order == input order, schema == input + 'Response', rows >= max_rows get
@@ -28,7 +33,7 @@ from __future__ import annotations
 import json
 import logging
 import urllib.request
-from dataclasses import dataclass, field
+from dataclasses import dataclass, field, replace
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -46,8 +51,10 @@ from batch_processing_new_spark.sources.readers import (
 from batch_processing_new_spark.sources.storage import apply_s3a_conf, map_url
 
 ROW_ID = "_row_id"
-#: Rows per enrich task: the reference's batch size (test.py:163).
+#: Rows per enrich batch: the reference's batch size (test.py:163).
 BATCH_ROWS = 1000
+#: Batches the reference runs at once: its outer pool's workers (test.py:200).
+OUTER_POOL = 10
 
 log = logging.getLogger(__name__)
 
@@ -85,6 +92,15 @@ class PipelineResult:
     row_count: int
     error_count: int
     error_indexes: list[int]  # 1-based data-row indexes (test.py:52)
+
+
+def enrich_topology(head_rows: int, slots: int, concurrency: int) -> tuple[int, int]:
+    """``(width, per-task call cap)`` for an enriched head of ``head_rows``
+    rows on ``slots`` task slots (module docstring)."""
+    batches = -(-head_rows // BATCH_ROWS)
+    width = min(batches, slots)
+    per_task = -(-min(batches, OUTER_POOL) * concurrency // max(width, 1))
+    return width, max(concurrency, per_task)
 
 
 def run_enrichment_pipeline(
@@ -139,13 +155,19 @@ def run_enrichment_pipeline(
     # df.limit(n) — the tail must be exactly the non-enriched rows.
     head = with_id.where(F.col(ROW_ID) < spec.max_rows)
     tail = with_id.where(F.col(ROW_ID) >= spec.max_rows)
-    width = -(-min(spec.max_rows, total_rows) // BATCH_ROWS)
+    width, per_task = enrich_topology(
+        min(spec.max_rows, total_rows),
+        spark.sparkContext.defaultParallelism,
+        cfg.concurrency,
+    )
     if width > 1:
         # round-robin: equal batches whatever the id layout; the sort
         # below restores ingest order
         head = head.repartition(width)
 
-    enriched_head = enrich(head, input_col, cfg, response_col="Response")
+    enriched_head = enrich(
+        head, input_col, replace(cfg, concurrency=per_task), response_col="Response"
+    )
     passthrough_tail = tail.withColumn("Response", F.lit(""))
 
     out = enriched_head.unionByName(passthrough_tail)

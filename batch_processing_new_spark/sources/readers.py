@@ -11,6 +11,7 @@ from __future__ import annotations
 
 import os
 
+import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -209,8 +210,14 @@ def with_ingest_row_id_and_count(
         return pinned.drop(pid_col).withColumn(
             col_name, F.lit(0).cast(T.LongType())
         ).where(F.lit(False)), 0
+    # a pandas frame with fixed-width columns goes through Arrow into a
+    # LocalTableScan, which broadcasts in a one-task JVM job; a Python
+    # list would plan as a pickled RDD scan, and broadcasting it would
+    # run a Python-worker task per core on every call
     off = spark.createDataFrame(
-        offsets,
+        pd.DataFrame(offsets, columns=[pid_col, off_col]).astype(
+            {pid_col: "int32", off_col: "int64"}
+        ),
         T.StructType(
             [
                 T.StructField(pid_col, T.IntegerType(), False),

@@ -1,6 +1,7 @@
 """Enrichment-pipeline edge cases (SURVEY §2A ops 3/12/13/14): empty
 input, limit boundaries, output-file shape at the extremes, the enrich
-stage's 1,000-row batch width, and the swallowed webhook failure."""
+stage's one-wave topology over 1,000-row batches, the dedupe path's
+width, and the swallowed webhook failure."""
 
 from __future__ import annotations
 
@@ -16,6 +17,7 @@ from batch_processing_new_spark.plans.pipeline import (
     PipelineResult,
     PipelineSpec,
     _notify_webhook,
+    enrich_topology,
     run_enrichment_pipeline,
 )
 from batch_processing_new_spark.sources.readers import read_csv, with_ingest_row_id
@@ -88,7 +90,9 @@ def _map_stage_tasks(spark, group: str) -> int:
     """Tasks of the first stage in ``group`` that ran the enrich map
     (the plan's MapInPandas node), read from the status store; later
     stages over the persisted output show the node too but read cached
-    blocks."""
+    blocks. Stages the store has already evicted (past
+    ``spark.ui.retainedStages``, skipped stages first) are passed over:
+    the map stage has just completed and is kept."""
     sc = spark.sparkContext
     jsc = sc._jsc.sc()
     jsc.listenerBus().waitUntilEmpty()
@@ -100,21 +104,65 @@ def _map_stage_tasks(spark, group: str) -> int:
         for sid in tracker.getJobInfo(job).stageIds
     )
     for sid in stages:
+        info = tracker.getStageInfo(sid)
+        if info is None:
+            continue
         if store.lastStageAttempt(sid).status().toString() != "COMPLETE":
             continue
         if 'label="MapInPandas"' in dot(store.operationGraphForStage(sid)):
-            return tracker.getStageInfo(sid).numTasks
+            return info.numTasks
     raise AssertionError(f"no enrich stage in job group {group!r}")
 
 
 @pytest.mark.parametrize(
-    "max_rows, width", [(2300, 3), (1000, 1), (10_000, 3)]
+    "head_rows, slots, concurrency, width, per_task",
+    [
+        (0, 4, 20, 0, 20),
+        (1000, 4, 20, 1, 20),
+        (2300, 4, 20, 3, 20),
+        (6000, 4, 20, 4, 30),
+        (20_000, 4, 20, 4, 50),
+        (30_000, 32, 20, 30, 20),
+    ],
 )
-def test_enrich_runs_in_1000_row_batches(spark, tmp_path, max_rows, width):
-    """A single-split CSV's head runs as ceil(head_rows / 1000) enrich
-    tasks, with the output of the one-task plan and the paid map run
-    exactly once."""
-    n = 2500
+def test_enrich_topology(head_rows, slots, concurrency, width, per_task):
+    """Batches beyond the slots fold onto the first wave, whose tasks
+    carry the reference's min(batches, 10) x 20 calls between them."""
+    assert enrich_topology(head_rows, slots, concurrency) == (width, per_task)
+
+
+def _run_in_group(spark, tmp_path, src, max_rows, group, dedupe=False):
+    """Run the pipeline under job group ``group``; return the result and
+    its output rows."""
+    spec = _spec(src, max_rows)
+    spec.enrich.dedupe_inputs = dedupe
+    sc = spark.sparkContext
+    sc.setJobGroup(group, "enrich width test")
+    try:
+        res = run_enrichment_pipeline(spark, spec, str(tmp_path / group))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    with open(res.output_path) as f:
+        return res, list(csv.DictReader(f))
+
+
+@pytest.mark.parametrize(
+    "n, max_rows, batches",
+    [
+        (2500, 2300, 3),
+        (2500, 1000, 1),
+        (2500, 10_000, 3),
+        (5500, 5500, 6),
+        # more batches than the test session's 8 slots: folded
+        (9500, 9500, 10),
+    ],
+    ids=["2300-3", "1000-1", "10000-3", "5500-6", "9500-10"],
+)
+def test_enrich_runs_in_1000_row_batches(spark, tmp_path, n, max_rows, batches):
+    """A single-split CSV's head runs as min(ceil(head_rows / 1000),
+    slots) enrich tasks, one wave, with the output of the one-task plan
+    and the paid map run exactly once."""
     src = _write_csv(tmp_path / "w.csv", [[i, f"t{i % 700}", i] for i in range(n)])
     raw = read_csv(spark, src)
     assert raw.rdd.getNumPartitions() == 1
@@ -127,28 +175,36 @@ def test_enrich_runs_in_1000_row_batches(spark, tmp_path, max_rows, width):
         .collect()
     )
 
-    sc = spark.sparkContext
-    group = f"enrich-width-{max_rows}"
-    sc.setJobGroup(group, "enrich width test")
-    try:
-        res = run_enrichment_pipeline(
-            spark, _spec(src, max_rows), str(tmp_path / "out")
-        )
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
+    group = f"enrich-width-{n}-{max_rows}"
+    res, rows = _run_in_group(spark, tmp_path, src, max_rows, group)
 
     # the stage also computes the passthrough tail: one more task (its
     # single split), empty when max_rows covers the whole input
+    width = min(batches, spark.sparkContext.defaultParallelism)
     assert _map_stage_tasks(spark, group) == width + 1
     # every head row enriched once: the round-robin shuffle and the
     # sort's sampling job did not re-run the paid map
     assert enrich_mod._LIVE_ACCUMULATORS[-1].value == min(max_rows, n)
     assert res.row_count == n
-    with open(res.output_path) as f:
-        rows = list(csv.DictReader(f))
     assert [r["id"] for r in rows] == [str(i) for i in range(n)]
     assert [r["Response"] for r in rows] == [one_task.get(i, "") for i in range(n)]
+
+
+def test_dedupe_runs_distinct_inputs_at_full_width(spark, tmp_path):
+    """AQE must not coalesce the distinct inputs into one enrich task:
+    they run as defaultParallelism tasks, each text enriched once, with
+    the output of the non-dedupe run."""
+    n, distinct = 3000, 700
+    src = _write_csv(
+        tmp_path / "d.csv", [[i, f"t{i % distinct}", i] for i in range(n)]
+    )
+    _, plain = _run_in_group(spark, tmp_path, src, n, "enrich-plain")
+    _, deduped = _run_in_group(spark, tmp_path, src, n, "enrich-dedupe", dedupe=True)
+
+    sc = spark.sparkContext
+    assert _map_stage_tasks(spark, "enrich-dedupe") == sc.defaultParallelism
+    assert enrich_mod._LIVE_ACCUMULATORS[-1].value == distinct
+    assert deduped == plain
 
 
 def test_webhook_failure_is_logged_with_request_id(caplog):

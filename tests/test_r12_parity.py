@@ -4,7 +4,9 @@
    would (the reference's pandas-index contract: head(n) is the first n
    rows in ingest order) — ADVICE r11: the head/tail reconstruction test
    alone would not catch a silent renumbering.
-2. The empty-input short-circuit keeps the non-null LongType id field.
+2. The empty-input short-circuit keeps the non-null LongType id field,
+   and the offset table is a driver-local relation (broadcast with no
+   Python-worker job) whose ids stay contiguous past empty partitions.
 3. The Spark-SQL twin builders (``tokens_spark_sql`` /
    ``shingles_of_spark_sql``) must produce bit-identical results to the
    Column-algebra originals they replace on hot construction paths.
@@ -43,6 +45,24 @@ def test_row_id_empty_input_schema(spark):
     fld = out.schema["_row_id"]
     assert fld.dataType == T.LongType()
     assert fld.nullable is False
+
+
+def test_row_id_offsets_are_local_and_skip_empty_partitions(spark):
+    # partition 1 (ids 10-19) filtered empty: its offset must not leave a gap
+    df = spark.range(0, 40, 1, 4).where("id < 10 OR id >= 20")
+    from batch_processing_new_spark.sources.readers import (
+        with_ingest_row_id_and_count,
+    )
+
+    out, total = with_ingest_row_id_and_count(df)
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    # the line under BroadcastExchange is its child: the offset table
+    build_side = plan.split("BroadcastExchange", 1)[1].splitlines()[1]
+    assert "LocalTableScan" in build_side
+    assert "ExistingRDD" not in build_side
+    assert total == 30
+    got = sorted((r["id"], r["_row_id"]) for r in out.collect())
+    assert [rid for _, rid in got] == list(range(30))
 
 
 _TEXTS = [
