@@ -16,5 +16,11 @@ Design rules (SURVEY.md §1.4, §4.2):
 
 __version__ = "0.1.0"
 
+# so every Python worker that unpickles an engine function stops
+# re-reading unchanged zips on each task (see shipping.guard_zip_rereads)
+from batch_processing_new_spark.shipping import guard_zip_rereads
+
+guard_zip_rereads()
+
 from batch_processing_new_spark.session import get_spark  # noqa: F401
 from batch_processing_new_spark.registry import all_queries, all_oracles  # noqa: F401

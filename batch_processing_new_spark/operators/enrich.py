@@ -34,6 +34,10 @@ Scale notes:
 - Spark task retries would re-run whole partitions of paid API calls —
   callers should run the enrich stage with ``spark.task.maxFailures=1``
   and speculation off, or make calls idempotent via the dedupe path.
+  In ``plans/pipeline.py`` the enrich output lands in shuffle files
+  (the order-restoring ``repartition(1)``), so a retried sink task reads
+  them back rather than paying for the calls again; only a retried
+  enrich task (or a lost shuffle file) re-pays its partition.
 - ``dedupe_inputs=True`` enriches only DISTINCT input texts and joins
   results back — the big real-world cost optimization the reference
   lacks (SURVEY.md §4.2).

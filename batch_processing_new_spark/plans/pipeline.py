@@ -5,7 +5,7 @@ Mirrors ops 1-15 of SURVEY.md §2A (reference test.py:141-285):
   job spec -> CSV scan -> ingest-order _row_id -> head(max_rows) ->
   spread over 1,000-row batches -> per-row LLM map -> append Response ->
   passthrough tail (empty Response) -> order-restoring sort ->
-  single-file CSV sink -> error report -> completion webhook.
+  single-file CSV sink, observing the error report -> completion webhook.
 
 Enrich topology: the head holds ``batches = ceil(head_rows / 1000)`` of
 the reference's 1,000-row batches (``head_rows = min(max_rows, input
@@ -35,7 +35,7 @@ import logging
 import urllib.request
 from dataclasses import dataclass, field, replace
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from batch_processing_new_spark.operators.enrich import (
@@ -112,10 +112,14 @@ def run_enrichment_pipeline(
     """Execute the whole reference flow (§3.1) and return the report.
 
     ``df`` overrides the CSV scan for testing; otherwise ``spec.file_url``
-    is read as CSV. The enrich stage is persisted before its two
-    consumers (sink + error aggregation) — the reference re-reads its
-    output buffer (test.py:231,242); naive Spark would re-run the paid
-    LLM stage instead, so the persist is a correctness-of-cost matter.
+    is read as CSV. The enriched frame has ONE consumer, the sink, like
+    the reference's one pass (test.py:170-253): the error report rides
+    on that same job as an ``Observation`` of the enriched head, so the
+    paid LLM stage runs once with no persist and no second scan. The
+    order-restoring sort is ``repartition(1)`` + ``sortWithinPartitions``
+    (the sink writes one file anyway): no range-sampling jobs, and the
+    enrich output lands in shuffle files, so a retried sink task reads
+    them back instead of re-paying the calls.
     """
     spec.validate()
     cfg = EnrichConfig(
@@ -155,10 +159,9 @@ def run_enrichment_pipeline(
     # df.limit(n) — the tail must be exactly the non-enriched rows.
     head = with_id.where(F.col(ROW_ID) < spec.max_rows)
     tail = with_id.where(F.col(ROW_ID) >= spec.max_rows)
+    head_rows = min(spec.max_rows, total_rows)
     width, per_task = enrich_topology(
-        min(spec.max_rows, total_rows),
-        spark.sparkContext.defaultParallelism,
-        cfg.concurrency,
+        head_rows, spark.sparkContext.defaultParallelism, cfg.concurrency
     )
     if width > 1:
         # round-robin: equal batches whatever the id layout; the sort
@@ -168,46 +171,47 @@ def run_enrichment_pipeline(
     enriched_head = enrich(
         head, input_col, replace(cfg, concurrency=per_task), response_col="Response"
     )
+    # op 13: error aggregation — the 1-based indexes of sentinel rows
+    # (reference count_errors_in_csv, test.py:40-54), observed as the
+    # sink's job runs. An empty head plans as a pruned branch that never
+    # reports its metrics, so it is not observed (it has no errors).
+    errors = None
+    if head_rows > 0:
+        errors = Observation()
+        enriched_head = enriched_head.observe(
+            errors,
+            F.collect_list(
+                F.when(F.col("Response") == SENTINEL, F.col(ROW_ID) + 1)
+            ).alias("idx"),
+        )
     passthrough_tail = tail.withColumn("Response", F.lit(""))
 
     out = enriched_head.unionByName(passthrough_tail)
-    # dual consumption below (write + error agg): persist so the paid
-    # enrichment map runs exactly once
-    out = out.persist()
-    try:
-        ordered = out.orderBy(ROW_ID)
+    ordered = out.repartition(1).sortWithinPartitions(ROW_ID).drop(ROW_ID)
 
-        dest = map_url(output_dir)
-        if dest.scheme == "s3a":
-            # object-store sink (reference put_object + public-read ACL,
-            # test.py:248-253): ONE downloadable object at the final
-            # key (stage + FS rename — a bare .csv(path) write would
-            # leave a part-file DIRECTORY at the advertised key), ACL
-            # via the s3a canned-ACL conf, and the returned URL is the
-            # public HTTPS form the reference hands back
-            from batch_processing_new_spark.sinks.writers import (
-                write_single_csv_hadoop,
-            )
-
-            out_path = f"{apply_s3a_conf(spark, dest, public_read=True)}/{spec.file_name}_final.csv"
-            write_single_csv_hadoop(spark, ordered.drop(ROW_ID), out_path)
-            bucket_key = out_path[len("s3a://"):]
-            bucket, _, key = bucket_key.partition("/")
-            output_path = f"https://{bucket}.s3.amazonaws.com/{key}"
-        else:
-            output_path = write_single_csv(
-                ordered.drop(ROW_ID), f"{output_dir}/{spec.file_name}_final.csv"
-            )
-        # op 13: error aggregation — filter + count + collect of 1-based
-        # indexes (reference count_errors_in_csv, test.py:40-54)
-        errs = (
-            out.where(F.col("Response") == SENTINEL)
-            .select((F.col(ROW_ID) + 1).alias("idx"))
-            .orderBy("idx")
+    dest = map_url(output_dir)
+    if dest.scheme == "s3a":
+        # object-store sink (reference put_object + public-read ACL,
+        # test.py:248-253): ONE downloadable object at the final
+        # key (stage + FS rename — a bare .csv(path) write would
+        # leave a part-file DIRECTORY at the advertised key), ACL
+        # via the s3a canned-ACL conf, and the returned URL is the
+        # public HTTPS form the reference hands back
+        from batch_processing_new_spark.sinks.writers import (
+            write_single_csv_hadoop,
         )
-        error_indexes = [int(r.idx) for r in errs.collect()]
-    finally:
-        out.unpersist()
+
+        out_path = f"{apply_s3a_conf(spark, dest, public_read=True)}/{spec.file_name}_final.csv"
+        write_single_csv_hadoop(spark, ordered, out_path)
+        bucket_key = out_path[len("s3a://"):]
+        bucket, _, key = bucket_key.partition("/")
+        output_path = f"https://{bucket}.s3.amazonaws.com/{key}"
+    else:
+        output_path = write_single_csv(
+            ordered, f"{output_dir}/{spec.file_name}_final.csv"
+        )
+    # a set: a re-run map stage would report its rows' ids twice
+    error_indexes = sorted(set(errors.get["idx"])) if errors else []
 
     result = PipelineResult(
         output_path=output_path,

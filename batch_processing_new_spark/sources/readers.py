@@ -11,7 +11,6 @@ from __future__ import annotations
 
 import os
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -164,9 +163,9 @@ def with_ingest_row_id_and_count(
     the low 33 bits of ``monotonically_increasing_id`` (its documented
     layout: partition id << 33 | per-partition row counter, counter
     assigned in iteration order — the same order zipWithIndex used).
-    No global sort, no single-partition funnel, scale-safe; the offset
-    table joins back as a broadcast on the partition id, so the data
-    rows never move or cross the Python boundary. The previous
+    No global sort, no single-partition funnel, scale-safe; the offsets
+    are looked up by partition id in an array literal, so the data rows
+    never move or cross the Python boundary. The previous
     implementation was ``RDD.zipWithIndex`` + ``createDataFrame``,
     which pickled EVERY ROW out to Python workers and parsed it back —
     two full non-Arrow serialization passes that dominate the
@@ -179,68 +178,42 @@ def with_ingest_row_id_and_count(
     Use it only when ingest-order identity is genuinely required (the
     enrichment pipeline); analytical queries should key on natural columns.
     """
-    spark = df.sparkSession
     if col_name in df.columns:
         raise ValueError(f"column {col_name!r} already exists")
-    pid_col, off_col = "_ingest_pid", "_ingest_offset"
+    pid_col = "_ingest_pid"
     pinned = df.withColumn(
         pid_col, F.spark_partition_id()
     ).localCheckpoint(eager=False)
-    counts = (
+    counts = dict(
         pinned.groupBy(pid_col).agg(F.count(F.lit(1)).alias("n")).collect()
     )
+    # dense over pids 0..max: an empty partition takes the running offset
     offsets, acc = [], 0
-    for r in sorted(counts, key=lambda r: r[pid_col]):
-        if r["n"] >= (1 << 33):
+    for pid in range(max(counts, default=0) + 1):
+        n = counts.get(pid, 0)
+        if n >= (1 << 33):
             # the low-33-bit local index would bleed into the partition
             # bits and ids silently corrupt — fail loud instead (the
             # counts are already on the driver, the check is free)
             raise ValueError(
-                f"with_ingest_row_id: partition {r[pid_col]} holds "
-                f"{r['n']} rows (>= 2^33); repartition the input first"
+                f"with_ingest_row_id: partition {pid} holds "
+                f"{n} rows (>= 2^33); repartition the input first"
             )
-        offsets.append((r[pid_col], acc))
-        acc += r["n"]
-    if not offsets:
-        # empty input: no partitions produced rows; the join below would
-        # have an empty build side and drop nothing — short-circuit to a
-        # typed empty frame with the SAME non-null id field the non-empty
-        # path produces (schema-sensitive consumers — strict unionByName,
-        # writers — must not see nullability diverge on emptiness)
-        return pinned.drop(pid_col).withColumn(
-            col_name, F.lit(0).cast(T.LongType())
-        ).where(F.lit(False)), 0
-    # a pandas frame with fixed-width columns goes through Arrow into a
-    # LocalTableScan, which broadcasts in a one-task JVM job; a Python
-    # list would plan as a pickled RDD scan, and broadcasting it would
-    # run a Python-worker task per core on every call
-    off = spark.createDataFrame(
-        pd.DataFrame(offsets, columns=[pid_col, off_col]).astype(
-            {pid_col: "int32", off_col: "int64"}
-        ),
-        T.StructType(
-            [
-                T.StructField(pid_col, T.IntegerType(), False),
-                T.StructField(off_col, T.LongType(), False),
-            ]
-        ),
+        offsets.append(acc)
+        acc += n
+    # the offsets ride in the plan as one array literal, so the id is a
+    # plain projection over the pinned blocks: no join, no extra job.
+    # Empty input needs no special case (no row looks an offset up) and
+    # keeps the same id field as any other input
+    offset = F.element_at(
+        F.array(*[F.lit(o).cast(T.LongType()) for o in offsets]),
+        F.col(pid_col) + 1,
     )
-    # local index stamped BEFORE the join: evaluated directly over the
-    # pinned blocks, so it cannot depend on the join preserving
-    # stream-side row order (it does for a broadcast hash join, but the
-    # id must not rest on that)
-    idx_col = "_ingest_local_idx"
-    indexed = pinned.withColumn(
-        idx_col,
-        F.monotonically_increasing_id().bitwiseAND(F.lit((1 << 33) - 1)),
-    )
+    local_idx = F.monotonically_increasing_id().bitwiseAND(F.lit((1 << 33) - 1))
     return (
-        indexed.join(F.broadcast(off), pid_col)
-        .withColumn(
-            col_name, (F.col(off_col) + F.col(idx_col)).cast(T.LongType())
-        )
-        .drop(pid_col, off_col, idx_col)
-    ), acc
+        pinned.withColumn(col_name, offset + local_idx).drop(pid_col),
+        acc,
+    )
 
 
 def read_jsonl(

@@ -1,7 +1,8 @@
 """Enrichment-pipeline edge cases (SURVEY §2A ops 3/12/13/14): empty
 input, limit boundaries, output-file shape at the extremes, the enrich
 stage's one-wave topology over 1,000-row batches, the dedupe path's
-width, and the swallowed webhook failure."""
+width, the single-consumer job shape, exact error reports on
+all-failing and multi-split inputs, and the swallowed webhook failure."""
 
 from __future__ import annotations
 
@@ -9,10 +10,16 @@ import csv
 import logging
 
 import pytest
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from batch_processing_new_spark.operators import enrich as enrich_mod
-from batch_processing_new_spark.operators.enrich import EnrichConfig
+from batch_processing_new_spark.operators.enrich import (
+    SENTINEL,
+    EnrichConfig,
+    build_prompt,
+    mock_response,
+)
 from batch_processing_new_spark.plans.pipeline import (
     PipelineResult,
     PipelineSpec,
@@ -131,11 +138,16 @@ def test_enrich_topology(head_rows, slots, concurrency, width, per_task):
     assert enrich_topology(head_rows, slots, concurrency) == (width, per_task)
 
 
-def _run_in_group(spark, tmp_path, src, max_rows, group, dedupe=False):
+def _run_in_group(
+    spark, tmp_path, src, max_rows, group, dedupe=False, fails=frozenset()
+):
     """Run the pipeline under job group ``group``; return the result and
-    its output rows."""
+    its output rows. Inputs in ``fails`` fail at once (one attempt)."""
     spec = _spec(src, max_rows)
     spec.enrich.dedupe_inputs = dedupe
+    if fails:
+        spec.enrich.mock_fail_inputs = frozenset(fails)
+        spec.enrich.retries = 1
     sc = spark.sparkContext
     sc.setJobGroup(group, "enrich width test")
     try:
@@ -205,6 +217,76 @@ def test_dedupe_runs_distinct_inputs_at_full_width(spark, tmp_path):
     assert _map_stage_tasks(spark, "enrich-dedupe") == sc.defaultParallelism
     assert enrich_mod._LIVE_ACCUMULATORS[-1].value == distinct
     assert deduped == plain
+
+
+def test_enriched_frame_has_one_consumer(spark, tmp_path, monkeypatch):
+    """A single-split request runs at most 7 Spark jobs: scan (header,
+    schema), row-id count, head spread, enrich map, sink. Nothing is
+    persisted; the only persisted RDDs left are the row-id pass's lazy
+    local-checkpoint pins."""
+    src = _write_csv(tmp_path / "j.csv", [[i, f"t{i % 700}", i] for i in range(2500)])
+
+    def no_persist(self, *args, **kwargs):
+        raise AssertionError("the pipeline must not persist a frame")
+
+    monkeypatch.setattr(DataFrame, "persist", no_persist)
+    monkeypatch.setattr(DataFrame, "cache", no_persist)
+    group = "one-consumer"
+    res, rows = _run_in_group(spark, tmp_path, src, 2300, group)
+
+    sc = spark.sparkContext
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) <= 7
+    persisted = sc._jsc.getPersistentRDDs().values()
+    assert all(r.rdd().isLocallyCheckpointed() for r in persisted)
+    assert res.row_count == 2500 and len(rows) == 2500
+
+
+def _expected(texts, max_rows, fails):
+    """(Responses, 1-based error indexes) for ``texts`` in ingest order."""
+    responses = [
+        ""
+        if i >= max_rows
+        else SENTINEL
+        if t in fails
+        else mock_response(build_prompt("classify", t))
+        for i, t in enumerate(texts)
+    ]
+    return responses, [i + 1 for i, r in enumerate(responses) if r == SENTINEL]
+
+
+def test_all_failing_head_reports_every_index(spark, tmp_path):
+    texts = [f"t{i}" for i in range(30)]
+    src = _write_csv(tmp_path / "f.csv", [[i, t, i] for i, t in enumerate(texts)])
+    res, rows = _run_in_group(spark, tmp_path, src, 20, "all-fail", fails=texts)
+
+    responses, indexes = _expected(texts, 20, set(texts))
+    assert indexes == list(range(1, 21))
+    assert res.error_count == 20 and res.error_indexes == indexes
+    assert [r["id"] for r in rows] == [str(i) for i in range(30)]
+    assert [r["Response"] for r in rows] == responses
+
+
+def test_multi_split_input_reports_exact_indexes(spark, tmp_path):
+    """Two files are two splits; ingest order is split order. The head
+    (3 batches, spread over 3 tasks) spans both splits, and the tail
+    lies in the second."""
+    d = tmp_path / "in"
+    d.mkdir()
+    _write_csv(d / "a.csv", [[i, f"a{i % 50}", i] for i in range(1500)])
+    _write_csv(d / "b.csv", [[2000 + i, f"b{i % 40}", i] for i in range(1000)])
+    raw = read_csv(spark, str(d))
+    assert raw.rdd.getNumPartitions() == 2
+    ingest = [(str(r.id), r.text) for part in raw.rdd.glom().collect() for r in part]
+
+    fails = {"a7", "b3"}
+    res, rows = _run_in_group(spark, tmp_path, str(d), 2200, "multi-split", fails=fails)
+
+    responses, indexes = _expected([t for _, t in ingest], 2200, fails)
+    assert res.row_count == 2500
+    assert res.error_count == len(indexes) and res.error_indexes == indexes
+    assert [r["id"] for r in rows] == [i for i, _ in ingest]
+    assert [r["Response"] for r in rows] == responses
 
 
 def test_webhook_failure_is_logged_with_request_id(caplog):

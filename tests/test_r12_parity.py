@@ -4,9 +4,9 @@
    would (the reference's pandas-index contract: head(n) is the first n
    rows in ingest order) — ADVICE r11: the head/tail reconstruction test
    alone would not catch a silent renumbering.
-2. The empty-input short-circuit keeps the non-null LongType id field,
-   and the offset table is a driver-local relation (broadcast with no
-   Python-worker job) whose ids stay contiguous past empty partitions.
+2. Empty input keeps the non-null LongType id field, and the offsets
+   are a dense array literal (no broadcast, no join, no extra job)
+   whose ids stay contiguous past empty partitions.
 3. The Spark-SQL twin builders (``tokens_spark_sql`` /
    ``shingles_of_spark_sql``) must produce bit-identical results to the
    Column-algebra originals they replace on hot construction paths.
@@ -56,10 +56,12 @@ def test_row_id_offsets_are_local_and_skip_empty_partitions(spark):
 
     out, total = with_ingest_row_id_and_count(df)
     plan = out._jdf.queryExecution().executedPlan().toString()
-    # the line under BroadcastExchange is its child: the offset table
-    build_side = plan.split("BroadcastExchange", 1)[1].splitlines()[1]
-    assert "LocalTableScan" in build_side
-    assert "ExistingRDD" not in build_side
+    # the offsets are an array literal in the projection: no offset
+    # relation to broadcast or join, and the only RDD scan is the pinned
+    # input itself
+    assert "BroadcastExchange" not in plan and "Join" not in plan
+    assert plan.count("ExistingRDD") == 1
+    assert "element_at([0,10,10,20]" in plan
     assert total == 30
     got = sorted((r["id"], r["_row_id"]) for r in out.collect())
     assert [rid for _, rid in got] == list(range(30))
