@@ -22,25 +22,30 @@ pipeline (``plans/pipeline.py``, see its module docstring), whose small
 CSV arrives as one split, sets both: width ``min(batches, slots)`` over
 the reference's ``batches = ceil(head_rows / 1000)``, and a per-task cap
 that keeps ``min(batches, 10) x concurrency`` calls in flight when the
-batches outnumber the slots. The dedupe path spreads the distinct
-inputs over ``defaultParallelism`` tasks. The enrichment result is a
-typed struct (response, error, attempts, latency_ms) rather than an
-in-band sentinel; ``response`` keeps the sentinel-compatible value for
-parity.
+batches outnumber the slots. The dedupe path (below) runs at
+``defaultParallelism`` width. The enrichment result is a typed struct
+(response, error, attempts, latency_ms) rather than an in-band
+sentinel; ``response`` keeps the sentinel-compatible value for parity.
 
 Scale notes:
 - The operator is an optimizer barrier by construction (Python UDF); keep
   it late in the plan, after filters/limits, so Catalyst prunes first.
 - Spark task retries would re-run whole partitions of paid API calls —
   callers should run the enrich stage with ``spark.task.maxFailures=1``
-  and speculation off, or make calls idempotent via the dedupe path.
-  In ``plans/pipeline.py`` the enrich output lands in shuffle files
-  (the order-restoring ``repartition(1)``), so a retried sink task reads
-  them back rather than paying for the calls again; only a retried
-  enrich task (or a lost shuffle file) re-pays its partition.
-- ``dedupe_inputs=True`` enriches only DISTINCT input texts and joins
-  results back — the big real-world cost optimization the reference
-  lacks (SURVEY.md §4.2).
+  and speculation off, and use the dedupe path to pay each distinct
+  prompt once. In ``plans/pipeline.py`` the enrich output lands in
+  shuffle files (the order-restoring ``repartition(1)``), so a retried
+  sink task reads them back rather than paying for the calls again;
+  only a retried enrich task (or a lost shuffle file) re-pays its
+  partition (on the dedupe path, its partition's distinct prompts).
+- ``dedupe_inputs=True`` calls once per distinct prompt — the big
+  real-world cost optimization the reference lacks (SURVEY.md §4.2).
+  The input is hash-partitioned and sorted on the input column, so
+  equal inputs are adjacent in one task; the kernel calls the batch's
+  distinct texts and carries the last one's result into the next
+  batch, so memory stays one batch at any scale. The key is the
+  string-coerced text, i.e. the prompt itself, so NULL inputs get the
+  same ``str(None)`` prompt as without dedupe.
 """
 
 from __future__ import annotations
@@ -54,7 +59,6 @@ from dataclasses import dataclass, field, replace
 
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 SENTINEL = "Error: Unable to process"  # exact string, reference test.py:80
 
@@ -96,7 +100,7 @@ class EnrichConfig:
     mock_fail_inputs: frozenset[str] = field(default_factory=frozenset)
     # mock-only: simulated per-call latency seconds (0 = as fast as possible)
     mock_latency: float = 0.0
-    # cost optimization: enrich distinct inputs only, join back
+    # cost optimization: one call per distinct prompt (module docstring)
     dedupe_inputs: bool = False
 
     def __post_init__(self) -> None:
@@ -348,14 +352,17 @@ def enrich(
 
         cfg = replace(cfg, api_key=os.environ.get(cfg.api_key_env, ""))
 
-    if cfg.dedupe_inputs:
-        return _enrich_deduped(df, input_col, cfg, response_col, with_result_struct)
-
     appended = [response_col, "_enrich_error", "_enrich_attempts", "_enrich_latency_ms"]
     clash = [c for c in appended if c in df.columns]
     if clash:
         # a silent duplicate-name schema breaks every downstream select
         raise ValueError(f"enrich() output columns already exist: {clash}")
+    if cfg.dedupe_inputs:
+        # equal inputs co-partitioned and adjacent; an explicit count,
+        # which AQE never coalesces, keeps the full width
+        df = df.repartition(
+            df.sparkSession.sparkContext.defaultParallelism, input_col
+        ).sortWithinPartitions(input_col)
     # typed StructType, not DDL-string assembly: backticked-name
     # concatenation breaks on column names containing a backtick
     out_schema = T.StructType(
@@ -378,15 +385,23 @@ def enrich(
     _LIVE_ACCUMULATORS.append(acc)
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        carry: dict[str, tuple] = {}  # dedupe: the last batch's last text
         for pdf in batches:
             texts = pdf[input_col].astype(str).tolist()
-            results = asyncio.run(_enrich_series(texts, cfg))
+            todo = texts
+            if cfg.dedupe_inputs:
+                todo = [t for t in dict.fromkeys(texts) if t not in carry]
+            results = asyncio.run(_enrich_series(todo, cfg))
+            if cfg.dedupe_inputs and texts:
+                known = {**carry, **dict(zip(todo, results))}
+                results = [known[t] for t in texts]
+                carry = {texts[-1]: results[-1]}
             out = pdf.copy()
             out[response_col] = [r[0] for r in results]
             out["_enrich_error"] = [r[1] for r in results]
             out["_enrich_attempts"] = [r[2] for r in results]
             out["_enrich_latency_ms"] = [r[3] for r in results]
-            acc.add(len(out))
+            acc.add(len(todo))  # calls: rows, or distinct inputs
             yield out
 
     result = df.mapInPandas(run, schema=out_schema)
@@ -394,49 +409,3 @@ def enrich(
         result = result.drop("_enrich_error", "_enrich_attempts", "_enrich_latency_ms")
     return result
 
-
-def _enrich_deduped(
-    df: DataFrame,
-    input_col: str,
-    cfg: EnrichConfig,
-    response_col: str,
-    with_result_struct: bool,
-) -> DataFrame:
-    """Enrich DISTINCT inputs, then join responses back.
-
-    Same-input rows cost one API call instead of N.
-
-    Semantics parity with the non-dedupe path: distinct runs on the RAW
-    column (not a Spark string cast — Spark's CAST renders booleans/
-    floats/NULL differently than the pandas ``astype(str)`` the kernel
-    applies, so casting here would change PROMPTS between the two
-    paths), and the join back is null-safe so NULL inputs receive the
-    same ``str(None)``-prompted response they get without dedupe
-    (reference test.py:86 coerces with str() too).
-
-    Join strategy is left to the optimizer: the map is usually tiny ->
-    AQE picks a broadcast join from its actual size; an explicit
-    broadcast() HINT would be forced even for a huge high-cardinality
-    map (AQE never demotes a user hint) and could abort the job at the
-    driver's broadcast limit — violating the never-abort contract.
-    """
-    base_cfg = replace(cfg, dedupe_inputs=False)
-    # explicit width: AQE would coalesce a bare distinct()'s small
-    # shuffle to ONE enrich task, but never an explicit partition count;
-    # the aggregate reuses this hash partitioning, so it is one exchange
-    distinct = (
-        df.select(F.col(input_col).alias("_enrich_key"))
-        .repartition(df.sparkSession.sparkContext.defaultParallelism, "_enrich_key")
-        .distinct()
-    )
-    enriched_map = enrich(
-        distinct, "_enrich_key", base_cfg, response_col, with_result_struct=True
-    )
-    joined = df.join(
-        enriched_map,
-        df[input_col].eqNullSafe(enriched_map["_enrich_key"]),
-        "left",
-    ).drop("_enrich_key")
-    if not with_result_struct:
-        joined = joined.drop("_enrich_error", "_enrich_attempts", "_enrich_latency_ms")
-    return joined

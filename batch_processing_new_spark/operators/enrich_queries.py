@@ -70,9 +70,11 @@ ORDER BY doc_id
 def q31_enrich_dedupe(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Distinct-input enrichment: N rows, ~5 distinct inputs, 5 calls.
 
-    The cost optimization the reference lacks (SURVEY.md §4.2): enrich
-    ``DISTINCT lang`` then broadcast-join responses back to every row.
-    The oracle proves the join-back loses/duplicates nothing.
+    The cost optimization the reference lacks (SURVEY.md §4.2): rows
+    with equal ``lang`` are co-partitioned and adjacent, and the kernel
+    calls once per distinct prompt and maps the result onto every row.
+    The oracle proves no row is lost, duplicated or given another
+    input's response.
     """
     d = load_table(spark, sf_dir, "documents")
     cfg = EnrichConfig(system_prompt=_SYSPROMPT, transport="mock", dedupe_inputs=True)

@@ -190,26 +190,30 @@ def run_enrichment_pipeline(
     ordered = out.repartition(1).sortWithinPartitions(ROW_ID).drop(ROW_ID)
 
     dest = map_url(output_dir)
-    if dest.scheme == "s3a":
-        # object-store sink (reference put_object + public-read ACL,
-        # test.py:248-253): ONE downloadable object at the final
-        # key (stage + FS rename — a bare .csv(path) write would
-        # leave a part-file DIRECTORY at the advertised key), ACL
-        # via the s3a canned-ACL conf, and the returned URL is the
-        # public HTTPS form the reference hands back
-        from batch_processing_new_spark.sinks.writers import (
-            write_single_csv_hadoop,
-        )
+    try:
+        if dest.scheme == "s3a":
+            # object-store sink (reference put_object + public-read ACL,
+            # test.py:248-253): ONE downloadable object at the final
+            # key (stage + FS rename — a bare .csv(path) write would
+            # leave a part-file DIRECTORY at the advertised key), ACL
+            # via the s3a canned-ACL conf, and the returned URL is the
+            # public HTTPS form the reference hands back
+            from batch_processing_new_spark.sinks.writers import (
+                write_single_csv_hadoop,
+            )
 
-        out_path = f"{apply_s3a_conf(spark, dest, public_read=True)}/{spec.file_name}_final.csv"
-        write_single_csv_hadoop(spark, ordered, out_path)
-        bucket_key = out_path[len("s3a://"):]
-        bucket, _, key = bucket_key.partition("/")
-        output_path = f"https://{bucket}.s3.amazonaws.com/{key}"
-    else:
-        output_path = write_single_csv(
-            ordered, f"{output_dir}/{spec.file_name}_final.csv"
-        )
+            out_path = f"{apply_s3a_conf(spark, dest, public_read=True)}/{spec.file_name}_final.csv"
+            write_single_csv_hadoop(spark, ordered, out_path)
+            bucket_key = out_path[len("s3a://"):]
+            bucket, _, key = bucket_key.partition("/")
+            output_path = f"https://{bucket}.s3.amazonaws.com/{key}"
+        else:
+            output_path = write_single_csv(
+                ordered, f"{output_dir}/{spec.file_name}_final.csv"
+            )
+    finally:
+        # the sink was the pinned input's last reader
+        _release_row_id_pin(with_id)
     # a set: a re-run map stage would report its rows' ids twice
     error_indexes = sorted(set(errors.get["idx"])) if errors else []
 
@@ -222,6 +226,18 @@ def run_enrichment_pipeline(
     if spec.webhook_url:
         _notify_webhook(spec, result)
     return result
+
+
+def _release_row_id_pin(with_id: DataFrame) -> None:
+    """Unpersist the row-id pass's lazy ``localCheckpoint`` (the
+    ``LogicalRDD`` leaf of ``with_id``'s plan), which would otherwise
+    hold each request's input blocks until JVM GC. Reading ``with_id``
+    afterwards raises ``CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND``."""
+    leaves = with_id._jdf.queryExecution().analyzed().collectLeaves()
+    for i in range(leaves.size()):
+        leaf = leaves.apply(i)
+        if leaf.getClass().getSimpleName() == "LogicalRDD":
+            leaf.rdd().unpersist(False)
 
 
 def _notify_webhook(spec: PipelineSpec, result: PipelineResult) -> None:

@@ -10,6 +10,7 @@ import pytest
 
 from pyspark.sql import functions as F
 
+from batch_processing_new_spark.operators import enrich as enrich_mod
 from batch_processing_new_spark.operators.enrich import (
     SENTINEL,
     EnrichConfig,
@@ -71,6 +72,42 @@ def test_scripted_failures_degrade_to_sentinel(spark):
     for i in set(range(10)) - {3, 7}:
         assert by_id[i].Response == mock_response(build_prompt(SYS, f"doc-{i}"))
         assert by_id[i]._enrich_error is None
+
+
+@pytest.mark.parametrize("dedupe", [False, True], ids=["plain", "dedupe"])
+def test_existing_output_column_is_rejected(spark, dedupe):
+    df = spark.range(3).select(
+        F.col("id").cast("string").alias("text"), F.lit("x").alias("Response")
+    )
+    cfg = EnrichConfig(system_prompt=SYS, dedupe_inputs=dedupe)
+    with pytest.raises(ValueError, match="already exist"):
+        enrich(df, "text", cfg)
+
+
+def test_dedupe_matches_plain_across_arrow_batches(spark):
+    """NULLs and repeated texts spread over many 7-row Arrow batches:
+    each of the 14 distinct prompts (13 texts and str(None)) is called
+    once, and every row gets the Response of the non-dedupe path."""
+    df = spark.createDataFrame(
+        [(i, None if i % 11 == 0 else f"w{i % 13}") for i in range(500)],
+        "id long, text string",
+    )
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    saved = spark.conf.get(key)
+    spark.conf.set(key, "7")
+    try:
+        plain = dict(
+            enrich(df, "text", EnrichConfig(system_prompt=SYS))
+            .select("id", "Response")
+            .collect()
+        )
+        cfg = EnrichConfig(system_prompt=SYS, dedupe_inputs=True)
+        deduped = dict(enrich(df, "text", cfg).select("id", "Response").collect())
+    finally:
+        spark.conf.set(key, saved)
+    assert deduped == plain
+    assert plain[0] == mock_response(build_prompt(SYS, "None"))
+    assert enrich_mod._LIVE_ACCUMULATORS[-1].value == 14
 
 
 def test_full_pipeline_parity(spark, enrich_input_csv, tmp_path):

@@ -1,8 +1,9 @@
 """Enrichment-pipeline edge cases (SURVEY §2A ops 3/12/13/14): empty
 input, limit boundaries, output-file shape at the extremes, the enrich
 stage's one-wave topology over 1,000-row batches, the dedupe path's
-width, the single-consumer job shape, exact error reports on
-all-failing and multi-split inputs, and the swallowed webhook failure."""
+width, the single-consumer job shape, the release of the row-id pin,
+exact error reports on all-failing and multi-split inputs, and the
+swallowed webhook failure."""
 
 from __future__ import annotations
 
@@ -203,27 +204,37 @@ def test_enrich_runs_in_1000_row_batches(spark, tmp_path, n, max_rows, batches):
 
 
 def test_dedupe_runs_distinct_inputs_at_full_width(spark, tmp_path):
-    """AQE must not coalesce the distinct inputs into one enrich task:
-    they run as defaultParallelism tasks, each text enriched once, with
-    the output of the non-dedupe run."""
+    """AQE must not coalesce the co-partitioned inputs into one enrich
+    task: the head runs as defaultParallelism tasks (plus the tail's
+    split in the same stage), each text enriched once, in at most the
+    plain run's 7 jobs, with the output and error report of the
+    non-dedupe run."""
     n, distinct = 3000, 700
     src = _write_csv(
         tmp_path / "d.csv", [[i, f"t{i % distinct}", i] for i in range(n)]
     )
-    _, plain = _run_in_group(spark, tmp_path, src, n, "enrich-plain")
-    _, deduped = _run_in_group(spark, tmp_path, src, n, "enrich-dedupe", dedupe=True)
+    fails = {"t3", "t500"}
+    plain_res, plain = _run_in_group(
+        spark, tmp_path, src, n, "enrich-plain", fails=fails
+    )
+    res, deduped = _run_in_group(
+        spark, tmp_path, src, n, "enrich-dedupe", dedupe=True, fails=fails
+    )
 
     sc = spark.sparkContext
-    assert _map_stage_tasks(spark, "enrich-dedupe") == sc.defaultParallelism
+    assert _map_stage_tasks(spark, "enrich-dedupe") == sc.defaultParallelism + 1
+    assert len(sc.statusTracker().getJobIdsForGroup("enrich-dedupe")) <= 7
     assert enrich_mod._LIVE_ACCUMULATORS[-1].value == distinct
     assert deduped == plain
+    assert res.error_indexes == plain_res.error_indexes != []
 
 
 def test_enriched_frame_has_one_consumer(spark, tmp_path, monkeypatch):
     """A single-split request runs at most 7 Spark jobs: scan (header,
     schema), row-id count, head spread, enrich map, sink. Nothing is
-    persisted; the only persisted RDDs left are the row-id pass's lazy
-    local-checkpoint pins."""
+    persisted but the row-id pass's lazy local-checkpoint pin, which the
+    pipeline releases after the sink (see the next test); pins left by
+    other tests that call the row-id pass directly may remain."""
     src = _write_csv(tmp_path / "j.csv", [[i, f"t{i % 700}", i] for i in range(2500)])
 
     def no_persist(self, *args, **kwargs):
@@ -240,6 +251,21 @@ def test_enriched_frame_has_one_consumer(spark, tmp_path, monkeypatch):
     persisted = sc._jsc.getPersistentRDDs().values()
     assert all(r.rdd().isLocallyCheckpointed() for r in persisted)
     assert res.row_count == 2500 and len(rows) == 2500
+
+
+def test_consecutive_requests_release_their_row_id_pins(spark, tmp_path):
+    """A long-lived service must not hold every request's input: the
+    row-id pass's local-checkpoint pin is released after the sink, so
+    the persisted RDDs do not grow across consecutive requests."""
+    src = _write_csv(tmp_path / "r.csv", [[i, f"t{i % 50}", i] for i in range(300)])
+    persisted = spark.sparkContext._jsc.getPersistentRDDs
+    for k in range(3):
+        before = len(persisted())
+        res = run_enrichment_pipeline(
+            spark, _spec(src, 200), str(tmp_path / f"out{k}")
+        )
+        assert res.row_count == 300
+        assert len(persisted()) <= before
 
 
 def _expected(texts, max_rows, fails):
