@@ -12,10 +12,12 @@ Reference semantics being reproduced (SURVEY.md §2A, cited to
 - ~200 concurrent in-flight calls via a two-level thread pool
   (test.py:116,163-165,200)
 
-Spark mapping: ``df.mapInPandas`` — each Arrow batch is processed by an
-asyncio loop with a semaphore-capped client pool: Spark tasks are the
-reference's outer pool of batches, the semaphore its inner per-batch
-pool. Calls in flight are ``min(width, slots) x concurrency``, where
+Spark mapping: an iterator ``pandas_udf`` over the input column, so
+only that column crosses into Python however wide the rows are; the
+other columns stay in the JVM. Each task runs its Arrow batches' calls
+on one asyncio loop with a semaphore-capped client pool: Spark tasks
+are the reference's outer pool of batches, the semaphore its inner
+per-batch pool. Calls in flight are ``min(width, slots) x concurrency``, where
 width is the input's partition count and slots are executors x cores.
 ``enrich()`` keeps its input's partitioning and call cap; the enrichment
 pipeline (``plans/pipeline.py``, see its module docstring), whose small
@@ -41,11 +43,13 @@ Scale notes:
 - ``dedupe_inputs=True`` calls once per distinct prompt — the big
   real-world cost optimization the reference lacks (SURVEY.md §4.2).
   The input is hash-partitioned and sorted on the input column, so
-  equal inputs are adjacent in one task; the kernel calls the batch's
-  distinct texts and carries the last one's result into the next
-  batch, so memory stays one batch at any scale. The key is the
+  equal inputs are adjacent in one task; the kernel calls each batch's
+  distinct texts and carries the last one's call into the next batch,
+  so memory stays a few batches at any scale. The key is the
   string-coerced text, i.e. the prompt itself, so NULL inputs get the
-  same ``str(None)`` prompt as without dedupe.
+  same ``str(None)`` prompt as without dedupe. All rows of one text
+  share a task, so a text that fills much of the input makes that task
+  the stage's longest.
 """
 
 from __future__ import annotations
@@ -59,6 +63,7 @@ from dataclasses import dataclass, field, replace
 
 import pandas as pd
 from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
 
 SENTINEL = "Error: Unable to process"  # exact string, reference test.py:80
 
@@ -68,6 +73,14 @@ SENTINEL = "Error: Unable to process"  # exact string, reference test.py:80
 # leak one Accumulator per call forever — only recent queries can have
 # straggler flushes, so keep the last 64 alive.
 _LIVE_ACCUMULATORS: deque = deque(maxlen=64)
+
+# Arrow batches an enrich task holds while their calls run: the memory
+# bound of a task whose batches repeat one text (no new calls to wait on)
+_WINDOW_BATCHES = 8
+
+# the kernel's per-row result; enrich() appends its fields as columns
+_RESULT_NAMES = ["response", "error", "attempts", "latency_ms"]
+_RESULT_TYPE = "response string, error string, attempts int, latency_ms double"
 
 
 @dataclass
@@ -305,24 +318,69 @@ def _make_transport(cfg: EnrichConfig) -> Callable:
     raise ValueError(f"unknown transport: {cfg.transport}")
 
 
-async def _enrich_series(texts: list[str], cfg: EnrichConfig) -> list[tuple]:
+def _enrich_batches(
+    batches: Iterator[pd.Series], cfg: EnrichConfig, count: Callable[[int], object]
+) -> Iterator[pd.DataFrame]:
+    """The kernel of ``enrich()``: one task's batches of input cells in,
+    one result frame per batch out, in order. ``count`` gets each
+    batch's number of calls."""
+    loop = asyncio.new_event_loop()
     transport = _make_transport(cfg)
     sem = asyncio.Semaphore(cfg.concurrency)
-    try:
-        return list(
-            await asyncio.gather(
-                *(
-                    _call_with_retries(
-                        transport, build_prompt(cfg.system_prompt, t), t, cfg, sem
-                    )
-                    for t in texts
-                )
-            )
+    carry: dict[str, asyncio.Task] = {}  # dedupe: the last text read
+    window: deque = deque()  # (its rows' calls, its new calls) per batch
+
+    def call(text: str) -> asyncio.Task:
+        prompt = build_prompt(cfg.system_prompt, text)
+        return loop.create_task(
+            _call_with_retries(transport, prompt, text, cfg, sem)
         )
+
+    def wait(calls: list, **kw) -> None:
+        async def gathered() -> None:
+            await asyncio.gather(*calls, **kw)
+
+        loop.run_until_complete(gathered())
+
+    def finish() -> pd.DataFrame:
+        row_calls, new = window.popleft()
+        # a row's call is its batch's own or an earlier batch's
+        wait(new)
+        return pd.DataFrame([c.result() for c in row_calls], columns=_RESULT_NAMES)
+
+    try:
+        for cells in batches:
+            texts = cells.astype(str).tolist()
+            if cfg.dedupe_inputs:
+                todo = [t for t in dict.fromkeys(texts) if t not in carry]
+                known = {**carry, **{t: call(t) for t in todo}}
+                row_calls = [known[t] for t in texts]
+                new = [known[t] for t in todo]
+                if texts:  # sorted input: only this text can recur
+                    carry = {texts[-1]: known[texts[-1]]}
+            else:
+                new = row_calls = [call(t) for t in texts]
+            count(len(new))  # calls: rows, or distinct inputs
+            window.append((row_calls, new))
+            # await the oldest batch once the batches behind it can fill
+            # the call slots it frees: the slots stay full across batches,
+            # also when a batch of repeated texts has few distinct ones
+            while len(window) > 1 and (
+                len(window) > _WINDOW_BATCHES
+                or sum(len(w[1]) for w in list(window)[1:]) >= cfg.concurrency
+            ):
+                yield finish()
+        while window:
+            yield finish()
     finally:
+        left = [t for t in asyncio.all_tasks(loop) if not t.done()]
+        for t in left:  # the consumer stopped early
+            t.cancel()
+        wait(left, return_exceptions=True)
         ex = getattr(transport, "_executor", None)
         if ex is not None:
             ex.shutdown(wait=False)
+        loop.close()
 
 
 def enrich(
@@ -339,8 +397,6 @@ def enrich(
     column untouched and appends ``response_col`` (plus optionally the
     typed ``_enrich`` result struct with error/attempts/latency).
     """
-    from pyspark.sql import types as T
-
     from batch_processing_new_spark.shipping import ensure_package_on_executors
 
     ensure_package_on_executors(df.sparkSession)
@@ -353,27 +409,17 @@ def enrich(
         cfg = replace(cfg, api_key=os.environ.get(cfg.api_key_env, ""))
 
     appended = [response_col, "_enrich_error", "_enrich_attempts", "_enrich_latency_ms"]
-    clash = [c for c in appended if c in df.columns]
+    clash = [c for c in [*appended, "_enrich"] if c in df.columns]
     if clash:
         # a silent duplicate-name schema breaks every downstream select
         raise ValueError(f"enrich() output columns already exist: {clash}")
+    cells = F.col("`" + input_col.replace("`", "``") + "`")  # a literal name
     if cfg.dedupe_inputs:
         # equal inputs co-partitioned and adjacent; an explicit count,
         # which AQE never coalesces, keeps the full width
         df = df.repartition(
-            df.sparkSession.sparkContext.defaultParallelism, input_col
-        ).sortWithinPartitions(input_col)
-    # typed StructType, not DDL-string assembly: backticked-name
-    # concatenation breaks on column names containing a backtick
-    out_schema = T.StructType(
-        list(df.schema.fields)
-        + [
-            T.StructField(response_col, T.StringType()),
-            T.StructField("_enrich_error", T.StringType()),
-            T.StructField("_enrich_attempts", T.IntegerType()),
-            T.StructField("_enrich_latency_ms", T.DoubleType()),
-        ]
-    )
+            df.sparkSession.sparkContext.defaultParallelism, cells
+        ).sortWithinPartitions(cells)
     acc = df.sparkSession.sparkContext.accumulator(0)  # progress (test.py:97-101)
     # Pin the driver-side Accumulator for session lifetime: when the
     # enriched DataFrame is GC'd, Accumulator.__del__ deregisters the id,
@@ -384,28 +430,17 @@ def enrich(
     # enrich() call — bounded, never data-sized.
     _LIVE_ACCUMULATORS.append(acc)
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        carry: dict[str, tuple] = {}  # dedupe: the last batch's last text
-        for pdf in batches:
-            texts = pdf[input_col].astype(str).tolist()
-            todo = texts
-            if cfg.dedupe_inputs:
-                todo = [t for t in dict.fromkeys(texts) if t not in carry]
-            results = asyncio.run(_enrich_series(todo, cfg))
-            if cfg.dedupe_inputs and texts:
-                known = {**carry, **dict(zip(todo, results))}
-                results = [known[t] for t in texts]
-                carry = {texts[-1]: results[-1]}
-            out = pdf.copy()
-            out[response_col] = [r[0] for r in results]
-            out["_enrich_error"] = [r[1] for r in results]
-            out["_enrich_attempts"] = [r[2] for r in results]
-            out["_enrich_latency_ms"] = [r[3] for r in results]
-            acc.add(len(todo))  # calls: rows, or distinct inputs
-            yield out
+    def run(batches: Iterator[pd.Series]) -> Iterator[pd.DataFrame]:
+        return _enrich_batches(batches, cfg, acc.add)
 
-    result = df.mapInPandas(run, schema=out_schema)
-    if not with_result_struct:
-        result = result.drop("_enrich_error", "_enrich_attempts", "_enrich_latency_ms")
-    return result
+    # only the input column crosses into Python, however wide the rows;
+    # nondeterministic, so the optimizer never evaluates it twice
+    calls = F.pandas_udf(run, _RESULT_TYPE).asNondeterministic()
+    res = F.col("_enrich")
+    appended = appended if with_result_struct else appended[:1]
+    return (
+        df.withColumn("_enrich", calls(cells))
+        .withColumns({c: res[f] for f, c in zip(_RESULT_NAMES, appended)})
+        .drop("_enrich")
+    )
 

@@ -41,7 +41,7 @@ ORDER BY doc_id
 def q30_enrich_map(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The core operator end-to-end: Arrow-batched async map over documents.
 
-    Runs the REAL mapInPandas/asyncio/retry machinery with the
+    Runs the REAL pandas_udf/asyncio/retry machinery with the
     deterministic mock transport; the oracle recomputes the md5 response
     in SQL, so orchestration bugs (row drift, batch reordering of values,
     prompt construction) are caught by value-hash.
@@ -49,7 +49,7 @@ def q30_enrich_map(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
     cfg = EnrichConfig(system_prompt=_SYSPROMPT, transport="mock")
     # pin the enrichment pass: the final sort's range sampling would
-    # otherwise run the mapInPandas enrichment twice (measured as two
+    # otherwise run the enrichment UDF twice (measured as two
     # ~0.56 s Python stages at sf0.1) — at scale, twice the API calls
     return pin_before_sort(
         enrich(d.select("doc_id", "text"), "text", cfg).select(

@@ -46,6 +46,7 @@ from batch_processing_new_spark.operators.enrich import (
 from batch_processing_new_spark.sinks.writers import write_single_csv
 from batch_processing_new_spark.sources.readers import (
     read_csv,
+    release_row_id_pin,
     with_ingest_row_id_and_count,
 )
 from batch_processing_new_spark.sources.storage import apply_s3a_conf, map_url
@@ -213,7 +214,7 @@ def run_enrichment_pipeline(
             )
     finally:
         # the sink was the pinned input's last reader
-        _release_row_id_pin(with_id)
+        release_row_id_pin(with_id)
     # a set: a re-run map stage would report its rows' ids twice
     error_indexes = sorted(set(errors.get["idx"])) if errors else []
 
@@ -226,18 +227,6 @@ def run_enrichment_pipeline(
     if spec.webhook_url:
         _notify_webhook(spec, result)
     return result
-
-
-def _release_row_id_pin(with_id: DataFrame) -> None:
-    """Unpersist the row-id pass's lazy ``localCheckpoint`` (the
-    ``LogicalRDD`` leaf of ``with_id``'s plan), which would otherwise
-    hold each request's input blocks until JVM GC. Reading ``with_id``
-    afterwards raises ``CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND``."""
-    leaves = with_id._jdf.queryExecution().analyzed().collectLeaves()
-    for i in range(leaves.size()):
-        leaf = leaves.apply(i)
-        if leaf.getClass().getSimpleName() == "LogicalRDD":
-            leaf.rdd().unpersist(False)
 
 
 def _notify_webhook(spec: PipelineSpec, result: PipelineResult) -> None:

@@ -141,6 +141,10 @@ def read_csv(
     return reader.csv(path)
 
 
+#: The input partition id column of the row-id pass's pinned blocks.
+_PIN_COL = "_ingest_pid"
+
+
 def with_ingest_row_id(df: DataFrame, col_name: str = "_row_id") -> DataFrame:
     """Mint a contiguous 0-based ingest-order row id (see
     ``with_ingest_row_id_and_count``, which also returns the row total)."""
@@ -180,7 +184,7 @@ def with_ingest_row_id_and_count(
     """
     if col_name in df.columns:
         raise ValueError(f"column {col_name!r} already exists")
-    pid_col = "_ingest_pid"
+    pid_col = _PIN_COL
     pinned = df.withColumn(
         pid_col, F.spark_partition_id()
     ).localCheckpoint(eager=False)
@@ -214,6 +218,20 @@ def with_ingest_row_id_and_count(
         pinned.withColumn(col_name, offset + local_idx).drop(pid_col),
         acc,
     )
+
+
+def release_row_id_pin(df: DataFrame) -> None:
+    """Drop the input blocks that ``with_ingest_row_id`` pinned under
+    ``df`` (its lazy ``localCheckpoint``), which otherwise stay until
+    JVM GC. Call it after ``df``'s last action: reading ``df`` afterwards
+    raises ``CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND``."""
+    leaves = df._jdf.queryExecution().analyzed().collectLeaves()
+    for i in range(leaves.size()):
+        leaf = leaves.apply(i)
+        if leaf.getClass().getSimpleName() == "LogicalRDD" and (
+            _PIN_COL in leaf.schema().fieldNames()
+        ):
+            leaf.rdd().unpersist(False)
 
 
 def read_jsonl(

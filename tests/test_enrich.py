@@ -6,6 +6,7 @@ from __future__ import annotations
 import hashlib
 import random
 
+import pandas as pd
 import pytest
 
 from pyspark.sql import functions as F
@@ -51,6 +52,18 @@ def test_mock_determinism_matches_pandas_reimpl(spark):
         prompt = build_prompt(SYS, f"doc-{i}")
         expected = "resp::" + hashlib.md5(prompt.encode()).hexdigest()[:8]
         assert got[i] == expected
+
+
+@pytest.mark.parametrize("dedupe", [False, True], ids=["plain", "dedupe"])
+def test_input_column_name_is_literal(spark, dedupe):
+    """A CSV header may hold dots and backticks: the input column is
+    taken by its literal name on both paths."""
+    col = "user.text`"
+    df = spark.range(30).withColumn(col, F.concat(F.lit("doc-"), F.col("id") % 7))
+    cfg = EnrichConfig(system_prompt=SYS, dedupe_inputs=dedupe)
+    got = enrich(df, col, cfg).collect()
+    assert len(got) == 30
+    assert all(r["Response"] == mock_response(build_prompt(SYS, r[col])) for r in got)
 
 
 def test_scripted_failures_degrade_to_sentinel(spark):
@@ -108,6 +121,44 @@ def test_dedupe_matches_plain_across_arrow_batches(spark):
     assert deduped == plain
     assert plain[0] == mock_response(build_prompt(SYS, "None"))
     assert enrich_mod._LIVE_ACCUMULATORS[-1].value == 14
+
+
+@pytest.mark.parametrize("dedupe", [False, True], ids=["plain", "dedupe"])
+def test_kernel_keeps_the_call_cap_full_across_batches(monkeypatch, dedupe):
+    """Twelve sorted 5-row batches of two texts each, cap 8: the kernel
+    queues later batches' calls while it awaits the oldest batch, so the
+    cap is reached; one event loop per batch would peak at 2 (dedupe) or
+    5 (plain) calls in flight."""
+    live = peak = 0
+    make = enrich_mod._make_transport
+
+    def counting_transport(cfg):
+        inner = make(cfg)
+
+        async def transport(prompt, text):
+            nonlocal live, peak
+            live += 1
+            peak = max(peak, live)
+            try:
+                return await inner(prompt, text)
+            finally:
+                live -= 1
+
+        return transport
+
+    monkeypatch.setattr(enrich_mod, "_make_transport", counting_transport)
+    cfg = EnrichConfig(
+        system_prompt=SYS, concurrency=8, mock_latency=0.02, dedupe_inputs=dedupe
+    )
+    batches = [pd.Series([f"{b:02d}a"] * 3 + [f"{b:02d}b"] * 2) for b in range(12)]
+    counts = []
+    out = list(enrich_mod._enrich_batches(iter(batches), cfg, counts.append))
+    assert peak == 8
+    assert sum(counts) == (24 if dedupe else 60)
+    assert [len(o) for o in out] == [5] * 12
+    assert pd.concat(out)["response"].tolist() == [
+        mock_response(build_prompt(SYS, t)) for b in batches for t in b
+    ]
 
 
 def test_full_pipeline_parity(spark, enrich_input_csv, tmp_path):

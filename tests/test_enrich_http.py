@@ -17,17 +17,17 @@ network, no external deps, runs in CI.
 
 from __future__ import annotations
 
-import asyncio
 import json
 import threading
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 
+import pandas as pd
 import pytest
 
 from batch_processing_new_spark.operators.enrich import (
     SENTINEL,
     EnrichConfig,
-    _enrich_series,
+    _enrich_batches,
 )
 
 
@@ -105,8 +105,15 @@ def _cfg(url: str, path: str, **kw) -> EnrichConfig:
     )
 
 
+def _enrich_series(texts: list[str], cfg: EnrichConfig) -> list[tuple]:
+    """The enrich kernel over one batch: a (response, error, attempts,
+    latency_ms) tuple per text."""
+    [out] = _enrich_batches(iter([pd.Series(texts)]), cfg, lambda n: None)
+    return list(out.itertuples(index=False, name=None))
+
+
 def _run_one(cfg: EnrichConfig, text: str = "hello"):
-    [(resp, err, attempts, _ms)] = asyncio.run(_enrich_series([text], cfg))
+    [(resp, err, attempts, _ms)] = _enrich_series([text], cfg)
     return resp, err, attempts
 
 
@@ -168,7 +175,7 @@ def test_http_concurrency_not_throttled_by_default_executor(fake_server):
     cfg = _cfg(fake_server, "/ok", concurrency=96)
     texts = [f"t{i}" for i in range(96)]
     t0 = time.monotonic()
-    results = asyncio.run(_enrich_series(texts, cfg))
+    results = _enrich_series(texts, cfg)
     dt = time.monotonic() - t0
     assert all(r[0].startswith("echo::") for r in results)
     assert dt < 5.0

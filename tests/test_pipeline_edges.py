@@ -96,7 +96,7 @@ def test_single_enriched_row_boundary(spark, tmp_path):
 
 def _map_stage_tasks(spark, group: str) -> int:
     """Tasks of the first stage in ``group`` that ran the enrich map
-    (the plan's MapInPandas node), read from the status store; later
+    (the plan's ArrowEvalPython node), read from the status store; later
     stages over the persisted output show the node too but read cached
     blocks. Stages the store has already evicted (past
     ``spark.ui.retainedStages``, skipped stages first) are passed over:
@@ -117,7 +117,7 @@ def _map_stage_tasks(spark, group: str) -> int:
             continue
         if store.lastStageAttempt(sid).status().toString() != "COMPLETE":
             continue
-        if 'label="MapInPandas"' in dot(store.operationGraphForStage(sid)):
+        if 'label="ArrowEvalPython"' in dot(store.operationGraphForStage(sid)):
             return info.numTasks
     raise AssertionError(f"no enrich stage in job group {group!r}")
 

@@ -67,6 +67,23 @@ def test_row_id_offsets_are_local_and_skip_empty_partitions(spark):
     assert [rid for _, rid in got] == list(range(30))
 
 
+
+def test_release_row_id_pin_drops_only_its_own_pin(spark):
+    from batch_processing_new_spark.sources.readers import (
+        release_row_id_pin,
+        with_ingest_row_id,
+    )
+
+    persisted = spark.sparkContext._jsc.getPersistentRDDs
+    own = spark.range(0, 30, 1, 3).localCheckpoint()  # the caller's pin
+    before = len(persisted())
+    out = with_ingest_row_id(own.withColumn("v", F.col("id") * 2))
+    assert out.count() == 30
+    assert len(persisted()) == before + 1
+    release_row_id_pin(out)
+    assert len(persisted()) == before
+    assert own.count() == 30
+
 _TEXTS = [
     ("a", "the quick brown fox jumps over the lazy dog"),
     ("b", "one two"),

@@ -10,7 +10,7 @@ orchestration overhead — the engine-comparable number. This tool runs:
   A. a minimal reimplementation of that topology over pandas
      (reference-shape baseline — same pools, same batch size, same
      order-restoring merge; written fresh, not copied);
-  B. the engine's Spark ``enrich`` operator (mapInPandas + asyncio) on
+  B. the engine's Spark ``enrich`` operator (pandas_udf + asyncio) on
      the same rows.
 
 and prints one JSON line with rows/s for both. Target (BASELINE.md):
