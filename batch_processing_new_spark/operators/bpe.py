@@ -87,9 +87,9 @@ def _apply_merge(syms: Column, left: str, right: str) -> Column:
 # Round 12 note: an array_contains guard around the per-round fold
 # ("skip words lacking either merge symbol") was tried and REVERTED —
 # interleaved A/B at sf0.1 read neutral-to-negative (q169 guarded min
-# 2.49 s vs unguarded 2.29 s; q180 2.60 vs 2.62 — plans/r12/
-# r12_ab_bpe.json): the two probes cost about what the skipped folds
-# save, because early merges pair common characters most words contain.
+# 2.49 s vs unguarded 2.29 s; q180 2.60 vs 2.62, OPTIMIZATION_r12.md):
+# the two probes cost about what the skipped folds save, because early
+# merges pair common characters most words contain.
 
 
 def learn_bpe(

@@ -64,6 +64,7 @@ from dataclasses import dataclass, field, replace
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 SENTINEL = "Error: Unable to process"  # exact string, reference test.py:80
 
@@ -393,9 +394,13 @@ def enrich(
     """Append an LLM response column to ``df`` (reference ops 4-10).
 
     The input cell is string-coerced exactly as the reference does
-    (``str(row[column_index])``, test.py:86). Output keeps every input
-    column untouched and appends ``response_col`` (plus optionally the
-    typed ``_enrich`` result struct with error/attempts/latency).
+    (``str(row[column_index])``, test.py:86), and a NULL is prompted as
+    ``"None"``. An integer column is cast to string in the JVM first:
+    Arrow hands pandas a ``float64`` for any batch holding a NULL, which
+    would prompt ``1`` as ``"1.0"`` in that batch and ``"1"`` in the
+    next. Output keeps every input column untouched and appends
+    ``response_col`` (plus optionally the typed ``_enrich`` result
+    struct with error/attempts/latency).
     """
     from batch_processing_new_spark.shipping import ensure_package_on_executors
 
@@ -414,6 +419,8 @@ def enrich(
         # a silent duplicate-name schema breaks every downstream select
         raise ValueError(f"enrich() output columns already exist: {clash}")
     cells = F.col("`" + input_col.replace("`", "``") + "`")  # a literal name
+    if isinstance(df.schema[input_col].dataType, T.IntegralType):
+        cells = cells.cast("string")
     if cfg.dedupe_inputs:
         # equal inputs co-partitioned and adjacent; an explicit count,
         # which AQE never coalesces, keeps the full width

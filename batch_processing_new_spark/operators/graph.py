@@ -25,15 +25,16 @@ PR_ITERS = 3
 PR_DAMP = 0.85
 
 
-def copurchase_half_edges(lineitem: DataFrame) -> DataFrame:
-    """Canonical (src < dst) distinct co-purchase pairs — the
-    undirected edge set. Consumers needing the symmetric directed view
-    (PageRank) wrap it via copurchase_edges; consumers that work on
-    undirected edges (triangle counting) use this directly instead of
-    paying for a mirror they immediately filter away."""
-    parts = lineitem.groupBy("l_orderkey").agg(
+def order_baskets(lineitem: DataFrame) -> DataFrame:
+    """One row per order: ``p`` is its sorted distinct part keys."""
+    return lineitem.groupBy("l_orderkey").agg(
         F.array_sort(F.collect_set("l_partkey")).alias("p")
     )
+
+
+def basket_pairs(baskets: DataFrame) -> DataFrame:
+    """Every (src < dst) part pair inside each basket, one row per
+    (order, pair), generated in-row from the sorted basket."""
     p = F.col("p")
     pairs = F.flatten(
         F.transform(
@@ -44,11 +45,16 @@ def copurchase_half_edges(lineitem: DataFrame) -> DataFrame:
             ),
         )
     )
-    return (
-        parts.select(F.explode(pairs).alias("e"))
-        .select("e.src", "e.dst")
-        .distinct()
-    )
+    return baskets.select(F.explode(pairs).alias("e")).select("e.src", "e.dst")
+
+
+def copurchase_half_edges(lineitem: DataFrame) -> DataFrame:
+    """Canonical (src < dst) distinct co-purchase pairs — the
+    undirected edge set. Consumers needing the symmetric directed view
+    (PageRank) wrap it via copurchase_edges; consumers that work on
+    undirected edges (triangle counting) use this directly instead of
+    paying for a mirror they immediately filter away."""
+    return basket_pairs(order_baskets(lineitem)).distinct()
 
 
 def copurchase_edges(lineitem: DataFrame) -> DataFrame:
@@ -95,9 +101,9 @@ def pagerank(
 
     ``checkpoint_every=k`` eagerly localCheckpoints the rank frame
     every k iterations, truncating lineage so the final plan nests
-    O(k) instead of O(iters) joins. Measured (r06,
-    tools/pagerank_scale_probe.py + alternating fresh-session A/B at
-    sf0.1): for the normal single-action pattern the UNcheckpointed
+    O(k) instead of O(iters) joins. Measured (r06, a depth sweep +
+    alternating fresh-session A/B at sf0.1; TUNING.md "Retired one-shot
+    tools"): for the normal single-action pattern the UNcheckpointed
     loop is ~1.75 s/iteration FLAT through depth 20 (lineage does not
     compound — the apparent O(N^2) in the depth-sweep probe was N
     actions each replanning the full DAG), while eager checkpoints
@@ -337,27 +343,13 @@ def q166_item_similarity(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
     li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
-    baskets = li.groupBy("l_orderkey").agg(
-        F.array_sort(F.collect_set("l_partkey")).alias("p")
-    )
-    p = F.col("p")
-    pairs = F.flatten(
-        F.transform(
-            p,
-            lambda x, i: F.transform(
-                F.slice(p, i + 2, F.greatest(F.size(p) - i - 1, F.lit(0))),
-                lambda y: F.struct(x.alias("pa"), y.alias("pb")),
-            ),
-        )
-    )
-    co = (
-        baskets.select(F.explode(pairs).alias("e"))
-        .groupBy(F.col("e.pa").alias("pa"), F.col("e.pb").alias("pb"))
-        .agg(F.count("*").alias("co_orders"))
+    baskets = order_baskets(li)
+    co = basket_pairs(baskets).groupBy("src", "dst").agg(
+        F.count("*").alias("co_orders")
     )
     directed = co.selectExpr(
-        "pa AS part", "pb AS neighbor", "co_orders"
-    ).unionByName(co.selectExpr("pb AS part", "pa AS neighbor", "co_orders"))
+        "src AS part", "dst AS neighbor", "co_orders"
+    ).unionByName(co.selectExpr("dst AS part", "src AS neighbor", "co_orders"))
     n_per_item = (
         baskets.select(F.explode("p").alias("part"))
         .groupBy("part")

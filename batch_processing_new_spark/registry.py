@@ -73,17 +73,7 @@ _QUERY_MODULES = [
     "batch_processing_new_spark.sources.kafka_shim",
     "batch_processing_new_spark.streaming.stream_queries",
     "batch_processing_new_spark.streaming.incremental",
-    "batch_processing_new_spark.probes",
 ]
-
-# Diagnostic probes that DIVERGE BY DESIGN (see probes.py): they
-# measure the driver's comparison semantics, so local harnesses must
-# report them without counting them as failures.
-EXPECTED_DIVERGENT_PROBES = {
-    "p03_probe_hugeint_sum",
-    "p06_probe_null_window_order",
-    "p07_probe_decimal_scale",
-}
 
 _loaded = False
 _proven_cache: dict[str, int] | None = None
@@ -178,10 +168,7 @@ def _scan_driver_artifacts(root: str | None = None) -> dict[str, int]:
 # about every 4 rounds, zero manual curation. Re-populate ONLY when a
 # driver red needs closure or an oracle upgrade needs its first hash
 # row (the rows-only rule in _driver_verified would otherwise hide it
-# as "proven"). The seven diagnostic probes keep sorting BEHIND every
-# real query (VERDICT r04): their one-shot measurement is recorded in
-# CORRECTNESS_r04; they re-measure the environment only when they
-# rotate in naturally.
+# as "proven").
 _WINDOW_PRIORITY: list[str] = []
 
 # Unproven queries explicitly PUSHED BEHIND every other unproven query
@@ -198,9 +185,6 @@ def all_specs() -> dict[str, QuerySpec]:
     ordered = sorted(
         _REGISTRY,
         key=lambda n: (
-            # probes (p*) sort behind EVERY real query: their
-            # measurement is one-shot and already recorded (r04)
-            not n.startswith("q"),
             # explicit window entries lead even when a stale driver
             # row marks them proven (rows-only rows hide upgraded
             # oracles; re-confirmation rows are wanted twice)

@@ -40,7 +40,19 @@ TABLES = [
 #: derived at runtime from the same files — no cross-run state; each
 #: call still returns a FRESH DataFrame (fresh scan relation), so plan
 #: shapes, self-join resolution, and results are unchanged.
-_SCHEMA_CACHE: dict[tuple[str, str], T.StructType] = {}
+#: Each entry carries the path's ``os.stat`` fingerprint (one ~2 µs
+#: call), so a long-lived process re-infers the schema of a file that
+#: was replaced under the same name; a path ``os.stat`` cannot see
+#: (an object-store URI) keeps its first schema.
+_SCHEMA_CACHE: dict[tuple[str, str], tuple[tuple | None, T.StructType]] = {}
+
+
+def _fingerprint(path: str) -> tuple | None:
+    try:
+        st = os.stat(path)
+    except OSError:
+        return None
+    return (st.st_mtime_ns, st.st_size, st.st_ino)
 
 
 def _read_parquet_pinned(
@@ -48,12 +60,13 @@ def _read_parquet_pinned(
 ) -> DataFrame:
     key = (sf_dir, name)
     path = f"{sf_dir}/{name}.parquet"
-    sch = _SCHEMA_CACHE.get(key)
-    if sch is None:
+    stamp = _fingerprint(path)
+    hit = _SCHEMA_CACHE.get(key)
+    if hit is None or hit[0] != stamp:
         df = spark.read.parquet(path)
-        _SCHEMA_CACHE[key] = df.schema
+        _SCHEMA_CACHE[key] = (stamp, df.schema)
         return df
-    return spark.read.schema(sch).parquet(path)
+    return spark.read.schema(hit[1]).parquet(path)
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -271,16 +284,14 @@ def read_evolved_parquet(spark: SparkSession, path: str) -> DataFrame:
 
 
 #: fan_out sizing: estimated plan bytes per spread task. Calibrated by
-#: measurement at sf0.1 (OPTIMIZATION_r11.md): per-task fixed cost on
-#: this class of host is ~15-20 ms of scheduling plus ~100-500 ms of
-#: executor run overhead, so tiny inputs must NOT be cut into
-#: core-count slivers — a 0.25 MiB projection in 32 tasks spends ~30x
-#: more wall in per-task overhead than in its own expression work.
-#: The knob only shapes SMALL inputs: at 100 TB every scan already has
+#: measurement at sf0.1 (TUNING.md, "Scan-stage parallelism"): per-task
+#: fixed cost on this class of host is ~15-20 ms of scheduling plus
+#: ~100-500 ms of executor run overhead, so tiny inputs must NOT be cut
+#: into core-count slivers — a 0.25 MiB projection in 32 tasks spends
+#: ~30x more wall in per-task overhead than in its own expression work.
+#: It only shapes SMALL inputs: at 100 TB every scan already has
 #: >= cores partitions and fan_out no-ops entirely.
-FANOUT_TASK_BYTES = int(
-    os.environ.get("SPARK_GRAFT_FANOUT_TASK_BYTES", "32768")
-)
+FANOUT_TASK_BYTES = 32768
 
 
 #: Width-decision cache keyed on the ANALYZED plan's semanticHash (plus
@@ -294,6 +305,9 @@ FANOUT_TASK_BYTES = int(
 #: correct outcome, since values are width-independent everywhere by
 #: the engine's determinism discipline (tools/determinism_check.py).
 #: Caches a partitioning DECISION, never data or results; process-local.
+#: A file replaced under the same path can leave a stale entry; that
+#: changes only the partitioning, never a value, so entries carry no
+#: file fingerprint (unlike _SCHEMA_CACHE).
 _WIDTH_CACHE: dict[tuple, tuple[int, int]] = {}
 
 
@@ -307,9 +321,7 @@ def _plan_key(df: DataFrame, *knobs) -> tuple | None:
         return None  # non-classic backend: fall back to live probing
 
 
-def fan_out(
-    df: DataFrame, multiple: int = 1, task_bytes: int | None = None
-) -> DataFrame:
+def fan_out(df: DataFrame, task_bytes: int | None = None) -> DataFrame:
     """Spread a small-file scan across cores before an expression-heavy
     narrow stage — sized by DATA, capped by cores.
 
@@ -321,7 +333,7 @@ def fan_out(
     only) to unlock execution width.
 
     Width is ``ceil(estimated plan bytes / FANOUT_TASK_BYTES)`` capped
-    at ``defaultParallelism * multiple`` (guide §2: derive partitioning
+    at ``defaultParallelism`` (guide §2: derive partitioning
     from input size, never a core-count constant): a hard
     ``repartition(cores)`` is an AQE-opaque user shuffle, and at small
     inputs it pays ~cores x the per-task fixed overhead for microscopic
@@ -337,19 +349,20 @@ def fan_out(
     ``task_bytes`` overrides the default slice size per call site:
     Python-kernel consumers (mapInPandas/pandas UDF over vectors) pay a
     far higher per-task boundary cost than JVM expression chains, so
-    they pass a coarser slice (measured sweep in OPTIMIZATION_r11.md:
-    q113's Lloyd passes run ~35 percent faster at 128 KiB/task than at
-    the 32 KiB text default; the text band inverts).
+    they pass a coarser slice (measured sweep, TUNING.md "Retired
+    one-shot tools": q113's Lloyd passes run ~35 percent faster at
+    128 KiB/task than at the 32 KiB text default; the text band
+    inverts).
     """
     key = _plan_key(
         df,
         "fan_out",
-        df.sparkSession.sparkContext.defaultParallelism * multiple,
+        df.sparkSession.sparkContext.defaultParallelism,
         task_bytes,
     )
     hit = _WIDTH_CACHE.get(key) if key is not None else None
     if hit is None:
-        target = adaptive_width(df, multiple=multiple, task_bytes=task_bytes)
+        target = adaptive_width(df, task_bytes=task_bytes)
         # _jdf.rdd(), not df.rdd: the Python RDD wrapper adds a
         # serializer handshake on top of the same physical planning
         src = df._jdf.rdd().getNumPartitions()
@@ -399,9 +412,7 @@ def adaptive_width(
 #: Python-kernel fan_out slice (see fan_out docstring): coarser than the
 #: JVM-expression default because each Python task pays the worker
 #: handshake + Arrow round-trip regardless of slice size.
-FANOUT_PY_TASK_BYTES = int(
-    os.environ.get("SPARK_GRAFT_FANOUT_PY_TASK_BYTES", "131072")
-)
+FANOUT_PY_TASK_BYTES = 131072
 
 
 def pin_before_sort(df: DataFrame) -> DataFrame:

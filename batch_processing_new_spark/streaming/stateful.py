@@ -72,8 +72,8 @@ def running_user_stats(events_stream: DataFrame) -> DataFrame:
     exactly this, not state-maintenance superlinearity). The 100 TB
     recipe when the consumer needs FINAL state rather than a per-batch
     changelog: size micro-batches to the emission budget (fewer, larger
-    triggers — measured value-neutral and 5x-fewer-emissions by
-    tools/q78_emission_ab.py), or consume the update stream through a
+    triggers — measured value-neutral and 5x-fewer-emissions, TUNING.md
+    "Retired one-shot tools"), or consume the update stream through a
     foreachBatch keyed upsert (streaming/incremental.py) so the sink
     holds one row per user instead of every emission.
     """

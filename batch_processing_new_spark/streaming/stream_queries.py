@@ -400,8 +400,8 @@ def q78_stateful_running_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     and this keep-last dedup then reduces it back to one row per user.
     That shape is right for the harness's deterministic replay; a
     100 TB deployment wanting final state sizes its triggers to the
-    emission budget (measured value-neutral on this operator by
-    tools/q78_emission_ab.py) or swaps the memory sink + dedup for a
+    emission budget (measured value-neutral on this operator, TUNING.md
+    "Retired one-shot tools") or swaps the memory sink + dedup for a
     foreachBatch keyed upsert (the streaming/incremental.py machinery,
     driver-green as q86).
     """

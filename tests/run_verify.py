@@ -180,9 +180,6 @@ def main() -> int:
         only.update(hits)
     failed = []
     report: dict[str, dict] = {}
-    from batch_processing_new_spark.registry import (  # noqa: E402
-        EXPECTED_DIVERGENT_PROBES,
-    )
     # DuckDB output types pandas renders differently from Spark's
     # ints/doubles — a formatted-value hash diverges even when every
     # value is numerically equal (the r03 driver-red mechanism:
@@ -238,7 +235,6 @@ def main() -> int:
             print(f"ok     {name}: rows-only {len(srows)} rows ({dt:.1f}s)")
             record(name, rows=len(srows), err="no_oracle")
             continue
-        probe = name in EXPECTED_DIVERGENT_PROBES
         try:
             rel = con.sql(oracles[name])
             dcols = rel.columns
@@ -255,24 +251,13 @@ def main() -> int:
             continue
         if hostile:
             msg = f"hash-hostile oracle type(s) {hostile}"
-            if probe:
-                print(f"probe  {name}: diverges as designed ({msg})")
-                record(name, rows=len(srows), orows=len(drows), ok=False,
-                       err=f"probe expected-diverge: {msg}")
-            else:
-                print(f"FAILED {name}: {msg} — pandas would floatify; "
-                      "CAST the projection AS BIGINT/DOUBLE")
-                failed.append(name)
-                record(name, rows=len(srows), orows=len(drows), ok=False,
-                       err=msg)
+            print(f"FAILED {name}: {msg} — pandas would floatify; "
+                  "CAST the projection AS BIGINT/DOUBLE")
+            failed.append(name)
+            record(name, rows=len(srows), orows=len(drows), ok=False,
+                   err=msg)
             continue
         if len(srows) != len(drows):
-            if probe:
-                print(f"probe  {name}: diverges as designed "
-                      f"(spark_rows={len(srows)} oracle_rows={len(drows)})")
-                record(name, rows=len(srows), orows=len(drows), ok=False,
-                       err="probe expected-diverge: rowcount")
-                continue
             print(
                 f"FAILED {name}: rowcount spark={len(srows)} duck={len(drows)}"
             )
@@ -287,11 +272,6 @@ def main() -> int:
                    err="schema mismatch")
             continue
         a, b = canon_rows(scols, srows), canon_rows(dcols, drows)
-        if a != b and probe:
-            print(f"probe  {name}: diverges as designed (values)")
-            record(name, rows=len(srows), orows=len(drows), ok=False,
-                   err="probe expected-diverge: values")
-            continue
         if a != b:
             diff = next(
                 (i, x, y) for i, (x, y) in enumerate(zip(a, b)) if x != y

@@ -128,10 +128,7 @@ def test_poisoned_fixture_builder_shape(tmp_path):
 
 # -- round_report kernels ------------------------------------------------
 
-_rr = load_tool("round_report")
-decode_version, probe_report, status = (
-    _rr.decode_version, _rr.probe_report, _rr.status
-)
+status = load_tool("round_report").status
 
 
 def test_round_report_status_classification():
@@ -147,66 +144,6 @@ def test_round_report_status_classification():
         != "rows_only"
     )
     assert status({"hash_match": None, "err": "boom"}) == "err:boom"
-
-
-def test_round_report_version_decoding():
-    """10000*major + 100*minor + patch — must invert probes.py's
-    encoding exactly, or a red p01/p02 misreports the driver engine."""
-    assert decode_version(10000) == "1.0.0"
-    assert decode_version(40102) == "4.1.2"
-    assert decode_version(10300) == "1.3.0"
-    assert decode_version(None) == "?"
-
-
-def test_round_report_probe_red_decodes_driver_versions():
-    art = {
-        "p01_probe_duckdb_version": {
-            "hash_match": False, "spark_rows": 10000, "oracle_rows": 10300,
-        },
-        "p03_probe_hugeint_sum": {"hash_match": True},
-    }
-    lines = "\n".join(probe_report(art))
-    # a red p01 reports the DRIVER's duckdb version from oracle_rows
-    assert "driver DuckDB = 1.3.0" in lines
-    # a green p03 must carry the falsification warning
-    assert "FALSIFIES" in lines
-
-
-def test_round_report_probe_expected_pattern_is_quiet():
-    art = {
-        "p03_probe_hugeint_sum": {
-            "hash_match": False, "spark_rows": 1, "oracle_rows": 1,
-        },
-    }
-    lines = "\n".join(probe_report(art))
-    assert "as-expected" in lines and "FALSIFIES" not in lines
-
-
-def test_round_report_errored_probe_is_inconclusive():
-    """An err:* probe row measured NOTHING: it must not read as
-    confirming an expected-red mechanism (ADVICE r04)."""
-    art = {
-        "p03_probe_hugeint_sum": {"hash_match": None, "err": "oracle boom"},
-    }
-    lines = "\n".join(probe_report(art))
-    assert "UNEXPECTED/inconclusive" in lines
-    assert "as-expected" not in lines
-
-
-def test_round_report_unparseable_version_sentinel():
-    """probes.py encodes an unparseable version string as 1 row; the
-    decoder must name it rather than print a fake 0.0.1/0.0.0."""
-    assert "unparseable" in decode_version(1)
-
-
-def test_probe_version_encoder_sentinel():
-    from batch_processing_new_spark.probes import _enc_version
-
-    assert _enc_version("4.1.2") == 40102
-    assert _enc_version("1.0.0") == 10000
-    # garbage encodes to the 1-row sentinel, NOT an empty frame
-    assert _enc_version("nightly-build") == 1
-    assert _enc_version("") == 1
 
 
 def test_round_report_evidence_ages():
@@ -255,27 +192,6 @@ def test_canon_sort_cell_single_nan_array_is_not_null():
     assert _sort_cell([math.nan]) != _sort_cell(math.nan)
     # and the scalar null key is still shared across null flavors
     assert _sort_cell(None) == _sort_cell(math.nan)
-
-
-def test_q102_probe_heap_guard(monkeypatch):
-    """ADVICE r10: the x100 probe must fail fast at startup when the
-    scaled heap is missing — the default 16g builds the expensive x100
-    corpus and then OOMs mid-probe. <100 copies stays unguarded."""
-    guard = load_tool("q102_shuffle_probe")._require_scaled_heap
-
-    monkeypatch.delenv("SPARK_GRAFT_DRIVER_MEM", raising=False)
-    guard(10)  # x10 fits the default heap: no-op
-    with pytest.raises(SystemExit, match="scaled driver heap"):
-        guard(100)
-
-    monkeypatch.setenv("SPARK_GRAFT_DRIVER_MEM", "16g")
-    with pytest.raises(SystemExit, match="scaled driver heap"):
-        guard(100)
-    monkeypatch.setenv("SPARK_GRAFT_DRIVER_MEM", "96g")
-    guard(100)  # documented recipe passes
-    monkeypatch.setenv("SPARK_GRAFT_DRIVER_MEM", "not-a-size")
-    with pytest.raises(SystemExit, match="scaled driver heap"):
-        guard(100)
 
 
 def test_scale_stress_events_slice_constant():

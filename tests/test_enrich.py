@@ -123,6 +123,33 @@ def test_dedupe_matches_plain_across_arrow_batches(spark):
     assert enrich_mod._LIVE_ACCUMULATORS[-1].value == 14
 
 
+@pytest.mark.parametrize("dtype", ["long", "int"])
+def test_integer_input_prompts_one_text_per_value(spark, dtype):
+    """An integer column with a NULL over 4-row Arrow batches: the batch
+    holding the NULL reaches pandas as float64, yet every value is
+    prompted as str(v) and the NULL as "None", on both paths."""
+    vals = [None if i == 5 else i % 3 for i in range(12)]
+    df = spark.createDataFrame(list(enumerate(vals)), f"id long, n {dtype}")
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    saved = spark.conf.get(key)
+    spark.conf.set(key, "4")
+    try:
+        got = {
+            dedupe: dict(
+                enrich(df, "n", EnrichConfig(system_prompt=SYS, dedupe_inputs=dedupe))
+                .select("id", "Response")
+                .collect()
+            )
+            for dedupe in (False, True)
+        }
+    finally:
+        spark.conf.set(key, saved)
+    assert got[True] == got[False]
+    assert got[False] == {
+        i: mock_response(build_prompt(SYS, str(v))) for i, v in enumerate(vals)
+    }
+
+
 @pytest.mark.parametrize("dedupe", [False, True], ids=["plain", "dedupe"])
 def test_kernel_keeps_the_call_cap_full_across_batches(monkeypatch, dedupe):
     """Twelve sorted 5-row batches of two texts each, cap 8: the kernel

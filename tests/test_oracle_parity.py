@@ -10,13 +10,7 @@ from tests.conftest import SF_CORRECT
 from tests.oracle_check import assert_parity
 
 SPECS = all_specs()
-# probes.py entries measure the DRIVER's comparison semantics and
-# diverge by design — they are exercised by tests/test_probes.py, not
-# by the parity gate
-ORACLE_NAMES = [
-    n for n, s in SPECS.items()
-    if s.oracle is not None and "_probe_" not in n
-]
+ORACLE_NAMES = [n for n, s in SPECS.items() if s.oracle is not None]
 ROWS_ONLY_NAMES = [n for n, s in SPECS.items() if s.oracle is None]
 
 

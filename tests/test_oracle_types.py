@@ -49,9 +49,7 @@ def oracle_types():
         )
     out = {}
     for name, spec in all_specs().items():
-        if spec.oracle is None or "_probe_" in name:
-            # probes.py deliberately emits hostile types to measure the
-            # driver's comparison semantics — exempt by design
+        if spec.oracle is None:
             continue
         rel = con.sql(spec.oracle)
         out[name] = dict(zip([c.lower() for c in rel.columns],

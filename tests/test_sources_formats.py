@@ -44,3 +44,22 @@ def test_evolved_parquet_merges_added_column(spark, tmp_path):
     total = merged.agg(F.sum("o_totalprice")).first()[0]
     expect = v2.agg(F.sum("o_totalprice")).first()[0]
     assert total == expect
+
+
+def test_load_table_sees_a_replaced_file(spark, tmp_path):
+    """A long-lived process re-reads a table whose file was replaced
+    with an evolved schema: the cached schema must not hide the new
+    column."""
+    import pandas as pd
+
+    sf = str(tmp_path)
+    path = tmp_path / "part.parquet"
+    pd.DataFrame({"p_partkey": [1, 2], "p_name": ["a", "b"]}).to_parquet(path)
+    assert load_table(spark, sf, "part").columns == ["p_partkey", "p_name"]
+
+    pd.DataFrame(
+        {"p_partkey": [1, 2], "p_name": ["a", "b"], "p_retailprice": [9.5, 7.0]}
+    ).to_parquet(path)
+    got = load_table(spark, sf, "part")
+    assert got.columns == ["p_partkey", "p_name", "p_retailprice"]
+    assert sorted(got.select("p_retailprice").toPandas()["p_retailprice"]) == [7.0, 9.5]

@@ -97,10 +97,10 @@ def test_workers_keep_the_guard_and_skip_rereads(spark):
         # cloudpickle ships this closure by value and the engine module
         # it names by reference: unpickling it imports the package
         engine = shipping.__name__
-        reads = getattr(zipimport, "_probe_reads", None)
+        reads = getattr(zipimport, "_graft_test_reads", None)
         seen = reads is not None
         if not seen:
-            reads = zipimport._probe_reads = []
+            reads = zipimport._graft_test_reads = []
             real = zipimport._read_directory
 
             def counting(path):

@@ -26,8 +26,6 @@ coincide) and everything else on exact reprs. Rows are aligned by a
 string lexsort of both frames — alignment only; the comparison itself
 never goes through a lossy format.
 
-Probes (``_probe_``) are excluded: three diverge by design.
-
 Usage: python tools/driver_canon_check.py [--hostile MODE] [name-substr ...]
 
 ``SPARK_GRAFT_SF_DIR`` overrides the fixture dir (run at sf0.1 too
@@ -223,7 +221,7 @@ def main() -> int:
     args = sys.argv[1:]
     failed = []
     for name, fn in sorted(queries.items()):
-        if name not in oracles or "_probe_" in name:
+        if name not in oracles:
             continue
         if args and not any(a in name for a in args):
             continue

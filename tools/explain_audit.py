@@ -69,9 +69,7 @@ def main() -> None:
     # keep AQE on — see session.get_spark).
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     specs = all_specs()
-    # probes (probes.py) are driver-semantics diagnostics over literal
-    # relations — no scans, no joins, zero plan-audit signal
-    audited = [n for n in specs if n not in SKIP and "_probe_" not in n]
+    audited = [n for n in specs if n not in SKIP]
 
     out = [
         "# PLANS — physical-plan audit of the full query registry",

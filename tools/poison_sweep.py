@@ -226,7 +226,6 @@ def main(argv: list[str]) -> int:
         name
         for name, s in sorted(registry.all_specs().items())
         if s.oracle
-        and "_probe_" not in name  # probes diverge by design (probes.py)
         and (not argv or any(sub in name for sub in argv))
     ]
     failed: list[str] = []

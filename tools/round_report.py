@@ -3,19 +3,15 @@
 
 Run this FIRST at the top of a round, before touching any code
 (ROUNDLOG round-5 handoff step 1). It reads every driver artifact,
-decodes the probe battery (probes.py), classifies each checked query's
-transition against the prior rounds' last-known driver status, and
-prints:
+classifies each checked query's transition against the prior rounds'
+last-known driver status, and prints:
 
-1. the probe verdicts with their meaning spelled out (engine versions
-   decoded from row counts; whether the HUGEINT-formatting mechanism
-   is confirmed or falsified);
-2. status transitions — newly green / still red / NEW red / rows-only
+1. status transitions — newly green / still red / NEW red / rows-only
    / errored — each with the action the standing rules require;
-3. cumulative driver coverage vs the registry, the remaining
-   never-checked list, and the predicted next-round 50-slot window
-   (first 50 of registry order, which already resorts on the new
-   artifact).
+2. cumulative driver coverage vs the registry, the remaining
+   never-checked list, evidence staleness, and the predicted
+   next-round 50-slot window (first 50 of registry order, which
+   already resorts on the new artifact).
 
 Registry order is imported live, so the predicted window reflects the
 artifact being analyzed. Works on any past round number too.
@@ -35,23 +31,6 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
-# Local engine pins, encoded 10000*major + 100*minor + patch — keep in
-# sync with probes.py.
-LOCAL_DUCKDB_ENC = 10000
-LOCAL_PYSPARK_ENC = 40102
-
-# Expected probe pattern if the round-4 HUGEINT diagnosis holds and
-# the driver shares this sandbox's engine pins (probes.py docstring).
-PROBE_EXPECT = {
-    "p01_probe_duckdb_version": "green",
-    "p02_probe_spark_version": "green",
-    "p03_probe_hugeint_sum": "red",
-    "p04_probe_bigint_cast_sum": "green",
-    "p05_probe_nullable_int": "green",
-    "p06_probe_null_window_order": "red",
-    "p07_probe_decimal_scale": "red",
-}
-
 
 def status(row: dict) -> str:
     if not isinstance(row, dict):
@@ -63,15 +42,6 @@ def status(row: dict) -> str:
     if row.get("err") == "no_oracle" and row.get("spark_rows") is not None:
         return "rows_only"
     return f"err:{row.get('err')}"
-
-
-def decode_version(enc: int | None) -> str:
-    if enc is None:
-        return "?"
-    if enc == 1:
-        # probes.py _enc_version sentinel: version string did not parse
-        return "unparseable (sentinel 0.0.1)"
-    return f"{enc // 10000}.{(enc % 10000) // 100}.{enc % 100}"
 
 
 def evidence_ages(
@@ -100,45 +70,6 @@ def load_rounds() -> dict[int, dict]:
     return rounds
 
 
-def probe_report(art: dict) -> list[str]:
-    out = []
-    rows = {k: v for k, v in art.items() if "_probe_" in k}
-    if not rows:
-        return ["no probe rows in this artifact (pre-r04 round?)"]
-    for name in sorted(rows):
-        row, st = rows[name], status(rows[name])
-        exp = PROBE_EXPECT.get(name, "?")
-        # only a true red satisfies an expected-red probe: an err:*
-        # status (e.g. the oracle crashed on the driver) measured
-        # NOTHING and must not read as confirming the mechanism
-        # (ADVICE r04)
-        mark = "as-expected" if st == exp else "UNEXPECTED/inconclusive"
-        line = f"{name}: {st} (expected {exp}) [{mark}]"
-        if name == "p01_probe_duckdb_version":
-            line += (
-                f" — driver DuckDB = {decode_version(row.get('oracle_rows'))}"
-                f" (local {decode_version(LOCAL_DUCKDB_ENC)})"
-            )
-        elif name == "p02_probe_spark_version":
-            line += (
-                f" — driver PySpark = {decode_version(row.get('spark_rows'))}"
-                f" (local {decode_version(LOCAL_PYSPARK_ENC)})"
-            )
-        elif name == "p03_probe_hugeint_sum" and st == "green":
-            line += (
-                " — !! GREEN FALSIFIES the HUGEINT-formatting mechanism; do"
-                " not rewrite any red query until a new mechanism is isolated"
-            )
-        elif name == "p06_probe_null_window_order":
-            line += (
-                f" — null-order checksums spark={row.get('spark_rows')}"
-                f" duck={row.get('oracle_rows')} (12 vs 6 = NULLS FIRST vs"
-                " LAST divergence confirmed)"
-            )
-        out.append(line)
-    return out
-
-
 def main() -> int:
     rounds = load_rounds()
     if not rounds:
@@ -154,18 +85,13 @@ def main() -> int:
         for name, row in rounds[r].items():
             prior[name] = status(row)
 
-    print(f"== round {n} driver artifact: {len(art)} rows ==\n")
-    print("-- probes --")
-    for line in probe_report(art):
-        print(f"  {line}")
+    print(f"== round {n} driver artifact: {len(art)} rows ==")
 
     buckets: dict[str, list[str]] = {
         "newly_green": [], "first_green": [], "still_red": [],
         "new_red": [], "rows_only": [], "errored": [],
     }
     for name, row in sorted(art.items()):
-        if "_probe_" in name:
-            continue
         st, was = status(row), prior.get(name)
         if st == "green":
             buckets["newly_green" if was == "red" else "first_green"].append(name)
@@ -196,7 +122,7 @@ def main() -> int:
     from batch_processing_new_spark import registry
 
     specs = registry.all_specs()
-    qnames = [q for q in specs if "_probe_" not in q]
+    qnames = list(specs)
     # one evidence scan serves both the coverage count and the
     # staleness report (an evidenced query is exactly one with an age)
     ages = evidence_ages(rounds, n, qnames)
