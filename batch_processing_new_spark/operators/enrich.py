@@ -24,32 +24,34 @@ pipeline (``plans/pipeline.py``, see its module docstring), whose small
 CSV arrives as one split, sets both: width ``min(batches, slots)`` over
 the reference's ``batches = ceil(head_rows / 1000)``, and a per-task cap
 that keeps ``min(batches, 10) x concurrency`` calls in flight when the
-batches outnumber the slots. The dedupe path (below) runs at
-``defaultParallelism`` width. The enrichment result is a typed struct
+batches outnumber the slots. The enrichment result is a typed struct
 (response, error, attempts, latency_ms) rather than an in-band
 sentinel; ``response`` keeps the sentinel-compatible value for parity.
+
+Shared calls: at ``temperature == 0`` the model's answer depends only on
+the prompt, so equal prompts share one call — the big real-world cost
+optimization the reference lacks (SURVEY.md §4.2). The kernel calls
+each Arrow batch's distinct texts once and carries the last text's call
+into the next batch, so memory stays a few batches at any scale. On
+input laid out by ``co_partition()`` (hash-partitioned and sorted on the
+prompted text, so equal prompts are adjacent in one task) that is one
+call per distinct prompt; on any other layout it is at most one per
+distinct prompt per batch. The key is the string-coerced text, i.e. the
+prompt itself, so NULL inputs share the one ``str(None)`` prompt. At
+any other temperature every row gets its own call, as in the reference.
 
 Scale notes:
 - The operator is an optimizer barrier by construction (Python UDF); keep
   it late in the plan, after filters/limits, so Catalyst prunes first.
 - Spark task retries would re-run whole partitions of paid API calls —
   callers should run the enrich stage with ``spark.task.maxFailures=1``
-  and speculation off, and use the dedupe path to pay each distinct
-  prompt once. In ``plans/pipeline.py`` the enrich output lands in
-  shuffle files (the order-restoring ``repartition(1)``), so a retried
-  sink task reads them back rather than paying for the calls again;
-  only a retried enrich task (or a lost shuffle file) re-pays its
-  partition (on the dedupe path, its partition's distinct prompts).
-- ``dedupe_inputs=True`` calls once per distinct prompt — the big
-  real-world cost optimization the reference lacks (SURVEY.md §4.2).
-  The input is hash-partitioned and sorted on the input column, so
-  equal inputs are adjacent in one task; the kernel calls each batch's
-  distinct texts and carries the last one's call into the next batch,
-  so memory stays a few batches at any scale. The key is the
-  string-coerced text, i.e. the prompt itself, so NULL inputs get the
-  same ``str(None)`` prompt as without dedupe. All rows of one text
-  share a task, so a text that fills much of the input makes that task
-  the stage's longest.
+  and speculation off. In ``plans/pipeline.py`` the enrich output lands
+  in shuffle files (the order-restoring ``repartition(1)``), so a
+  retried sink task reads them back rather than paying for the calls
+  again; only a retried enrich task (or a lost shuffle file) re-pays its
+  partition (at temperature 0, its partition's distinct prompts).
+- ``co_partition()`` puts all rows of one text in one task, so a text
+  that fills much of the input makes that task the stage's longest.
 """
 
 from __future__ import annotations
@@ -62,7 +64,7 @@ from collections.abc import Callable, Iterator
 from dataclasses import dataclass, field, replace
 
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -114,8 +116,6 @@ class EnrichConfig:
     mock_fail_inputs: frozenset[str] = field(default_factory=frozenset)
     # mock-only: simulated per-call latency seconds (0 = as fast as possible)
     mock_latency: float = 0.0
-    # cost optimization: one call per distinct prompt (module docstring)
-    dedupe_inputs: bool = False
 
     def __post_init__(self) -> None:
         # the loop is `for attempt in range(1, retries + 1)` — the same
@@ -328,7 +328,9 @@ def _enrich_batches(
     loop = asyncio.new_event_loop()
     transport = _make_transport(cfg)
     sem = asyncio.Semaphore(cfg.concurrency)
-    carry: dict[str, asyncio.Task] = {}  # dedupe: the last text read
+    # temperature 0: equal prompts share a call (module docstring)
+    share = cfg.temperature == 0
+    carry: dict[str, asyncio.Task] = {}  # shared: the last text read
     window: deque = deque()  # (its rows' calls, its new calls) per batch
 
     def call(text: str) -> asyncio.Task:
@@ -352,16 +354,16 @@ def _enrich_batches(
     try:
         for cells in batches:
             texts = cells.astype(str).tolist()
-            if cfg.dedupe_inputs:
+            if share:
                 todo = [t for t in dict.fromkeys(texts) if t not in carry]
                 known = {**carry, **{t: call(t) for t in todo}}
                 row_calls = [known[t] for t in texts]
                 new = [known[t] for t in todo]
-                if texts:  # sorted input: only this text can recur
+                if texts:  # co-partitioned input: only this text can recur
                     carry = {texts[-1]: known[texts[-1]]}
             else:
                 new = row_calls = [call(t) for t in texts]
-            count(len(new))  # calls: rows, or distinct inputs
+            count(len(new))  # calls: rows, or new distinct prompts
             window.append((row_calls, new))
             # await the oldest batch once the batches behind it can fill
             # the call slots it frees: the slots stay full across batches,
@@ -384,6 +386,25 @@ def _enrich_batches(
         loop.close()
 
 
+def prompt_cells(df: DataFrame, input_col: str) -> Column:
+    """``input_col`` of ``df`` as ``enrich()`` prompts on it: taken by its
+    literal name, an integer column cast to string in the JVM (see
+    ``enrich()``)."""
+    cells = F.col("`" + input_col.replace("`", "``") + "`")
+    if isinstance(df.schema[input_col].dataType, T.IntegralType):
+        cells = cells.cast("string")
+    return cells
+
+
+def co_partition(df: DataFrame, input_col: str, width: int) -> DataFrame:
+    """``df`` in ``width`` partitions with equal prompts of ``input_col``
+    in one partition and adjacent: the layout on which ``enrich()`` at
+    temperature 0 calls each distinct prompt once. An explicit count,
+    which AQE never coalesces, keeps the full width."""
+    cells = prompt_cells(df, input_col)
+    return df.repartition(width, cells).sortWithinPartitions(cells)
+
+
 def enrich(
     df: DataFrame,
     input_col: str,
@@ -400,7 +421,9 @@ def enrich(
     would prompt ``1`` as ``"1.0"`` in that batch and ``"1"`` in the
     next. Output keeps every input column untouched and appends
     ``response_col`` (plus optionally the typed ``_enrich`` result
-    struct with error/attempts/latency).
+    struct with error/attempts/latency). The input's partitioning is
+    kept; at ``cfg.temperature == 0`` equal prompts share a call, once
+    per distinct prompt on input laid out by ``co_partition()``.
     """
     from batch_processing_new_spark.shipping import ensure_package_on_executors
 
@@ -418,15 +441,7 @@ def enrich(
     if clash:
         # a silent duplicate-name schema breaks every downstream select
         raise ValueError(f"enrich() output columns already exist: {clash}")
-    cells = F.col("`" + input_col.replace("`", "``") + "`")  # a literal name
-    if isinstance(df.schema[input_col].dataType, T.IntegralType):
-        cells = cells.cast("string")
-    if cfg.dedupe_inputs:
-        # equal inputs co-partitioned and adjacent; an explicit count,
-        # which AQE never coalesces, keeps the full width
-        df = df.repartition(
-            df.sparkSession.sparkContext.defaultParallelism, cells
-        ).sortWithinPartitions(cells)
+    cells = prompt_cells(df, input_col)
     acc = df.sparkSession.sparkContext.accumulator(0)  # progress (test.py:97-101)
     # Pin the driver-side Accumulator for session lifetime: when the
     # enriched DataFrame is GC'd, Accumulator.__del__ deregisters the id,

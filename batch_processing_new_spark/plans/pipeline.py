@@ -12,15 +12,25 @@ the reference's 1,000-row batches (``head_rows = min(max_rows, input
 rows)``; test.py:163,193-194), of which the reference runs up to 10 at
 once with 20 calls in flight each (test.py:116,200; SURVEY.md §2A
 row 8). Spark reads any CSV under its file open-cost floor (4 MB) as ONE
-split, so the head is spread by a round-robin ``repartition(width)``
-with ``width = min(batches, slots)``: batches beyond the task slots are
-folded onto the first wave's tasks instead of queueing in a second one.
-Each task then gets a call cap of
-``max(concurrency, ceil(min(batches, 10) x concurrency / width))``, so
-the job keeps the reference's ``min(batches, 10) x concurrency`` calls in
-flight when slots are short, and exactly ``width x concurrency`` when
-they are not. Heads of 1,000 rows or fewer are not repartitioned: a
-shuffle would only add cost to a one-batch job.
+split, so the head is spread over ``width = min(batches, slots)`` tasks
+by one shuffle: batches beyond the task slots are folded onto the first
+wave's tasks instead of queueing in a second one. Each task then gets a
+call cap of ``max(concurrency, ceil(min(batches, 10) x concurrency /
+width))``, so the job keeps the reference's ``min(batches, 10) x
+concurrency`` calls in flight when slots are short, and exactly ``width
+x concurrency`` when they are not. Heads of 1,000 rows or fewer are not
+repartitioned: a shuffle would only add cost to a one-batch job.
+
+The spread depends on the request's temperature. At temperature 0 the
+answer depends only on the prompt, so the enrich kernel shares one call
+among equal prompts (``operators/enrich.py``), and the spread is
+``co_partition``: hash-partitioned and sorted on the prompted text, so
+equal prompts are adjacent in one task and each distinct prompt is
+called once per request. A one-task head shares calls within each
+Arrow batch. At any other temperature every row is called, and the
+spread is a round-robin ``repartition(width)``, which balances rows
+whatever the texts; a text that fills much of a temperature-0 head
+makes its task the stage's longest, though it is called once.
 
 Parity contract (SURVEY.md §2A.1): output rows == input rows, output
 order == input order, schema == input + 'Response', rows >= max_rows get
@@ -41,6 +51,7 @@ from pyspark.sql import functions as F
 from batch_processing_new_spark.operators.enrich import (
     SENTINEL,
     EnrichConfig,
+    co_partition,
     enrich,
 )
 from batch_processing_new_spark.sinks.writers import write_single_csv
@@ -165,9 +176,12 @@ def run_enrichment_pipeline(
         head_rows, spark.sparkContext.defaultParallelism, cfg.concurrency
     )
     if width > 1:
-        # round-robin: equal batches whatever the id layout; the sort
-        # below restores ingest order
-        head = head.repartition(width)
+        # one shuffle either way (module docstring); the sort below
+        # restores ingest order
+        if cfg.temperature == 0:
+            head = co_partition(head, input_col, width)
+        else:
+            head = head.repartition(width)
 
     enriched_head = enrich(
         head, input_col, replace(cfg, concurrency=per_task), response_col="Response"

@@ -46,7 +46,6 @@ from __future__ import annotations
 
 import importlib.util
 import json
-import math
 import sys
 import time
 

@@ -16,12 +16,27 @@ from batch_processing_new_spark.operators.enrich import (
     SENTINEL,
     EnrichConfig,
     build_prompt,
+    co_partition,
     enrich,
     mock_response,
 )
 from batch_processing_new_spark.plans.pipeline import PipelineSpec, run_enrichment_pipeline
 
 SYS = "Classify the sentiment of the input."
+
+# temperature 0 shares one call among equal prompts ("dedupe"); above 0
+# every row gets its own call ("plain")
+TEMPERATURES = pytest.mark.parametrize(
+    "temperature", [0.7, 0.0], ids=["plain", "dedupe"]
+)
+
+
+def _laid_out(df, col: str, temperature: float):
+    """``df`` as the pipeline spreads it at ``temperature``: co-partitioned
+    on ``col`` at 0, where equal prompts share a call; as it is above."""
+    if temperature == 0:
+        return co_partition(df, col, df.sparkSession.sparkContext.defaultParallelism)
+    return df
 
 
 @pytest.fixture(scope="module")
@@ -54,14 +69,14 @@ def test_mock_determinism_matches_pandas_reimpl(spark):
         assert got[i] == expected
 
 
-@pytest.mark.parametrize("dedupe", [False, True], ids=["plain", "dedupe"])
-def test_input_column_name_is_literal(spark, dedupe):
+@TEMPERATURES
+def test_input_column_name_is_literal(spark, temperature):
     """A CSV header may hold dots and backticks: the input column is
-    taken by its literal name on both paths."""
+    taken by its literal name, also by ``co_partition``."""
     col = "user.text`"
     df = spark.range(30).withColumn(col, F.concat(F.lit("doc-"), F.col("id") % 7))
-    cfg = EnrichConfig(system_prompt=SYS, dedupe_inputs=dedupe)
-    got = enrich(df, col, cfg).collect()
+    cfg = EnrichConfig(system_prompt=SYS, temperature=temperature)
+    got = enrich(_laid_out(df, col, temperature), col, cfg).collect()
     assert len(got) == 30
     assert all(r["Response"] == mock_response(build_prompt(SYS, r[col])) for r in got)
 
@@ -87,20 +102,29 @@ def test_scripted_failures_degrade_to_sentinel(spark):
         assert by_id[i]._enrich_error is None
 
 
-@pytest.mark.parametrize("dedupe", [False, True], ids=["plain", "dedupe"])
-def test_existing_output_column_is_rejected(spark, dedupe):
+@TEMPERATURES
+def test_existing_output_column_is_rejected(spark, temperature):
     df = spark.range(3).select(
         F.col("id").cast("string").alias("text"), F.lit("x").alias("Response")
     )
-    cfg = EnrichConfig(system_prompt=SYS, dedupe_inputs=dedupe)
+    cfg = EnrichConfig(system_prompt=SYS, temperature=temperature)
     with pytest.raises(ValueError, match="already exist"):
         enrich(df, "text", cfg)
 
 
+def _responses_and_calls(df, col: str, temperature: float) -> tuple[dict, int]:
+    """``{id: Response}`` of ``df`` enriched on ``col`` at ``temperature``
+    (``_laid_out``), and the calls it made."""
+    cfg = EnrichConfig(system_prompt=SYS, temperature=temperature)
+    got = enrich(_laid_out(df, col, temperature), col, cfg).select("id", "Response")
+    return dict(got.collect()), enrich_mod._LIVE_ACCUMULATORS[-1].value
+
+
 def test_dedupe_matches_plain_across_arrow_batches(spark):
-    """NULLs and repeated texts spread over many 7-row Arrow batches:
-    each of the 14 distinct prompts (13 texts and str(None)) is called
-    once, and every row gets the Response of the non-dedupe path."""
+    """NULLs and repeated texts spread over many 7-row Arrow batches: at
+    temperature 0 each of the 14 distinct prompts (13 texts and
+    str(None)) is called once, at 0.7 each row is, and every row gets
+    the same Response."""
     df = spark.createDataFrame(
         [(i, None if i % 11 == 0 else f"w{i % 13}") for i in range(500)],
         "id long, text string",
@@ -109,53 +133,43 @@ def test_dedupe_matches_plain_across_arrow_batches(spark):
     saved = spark.conf.get(key)
     spark.conf.set(key, "7")
     try:
-        plain = dict(
-            enrich(df, "text", EnrichConfig(system_prompt=SYS))
-            .select("id", "Response")
-            .collect()
-        )
-        cfg = EnrichConfig(system_prompt=SYS, dedupe_inputs=True)
-        deduped = dict(enrich(df, "text", cfg).select("id", "Response").collect())
+        plain, plain_calls = _responses_and_calls(df, "text", 0.7)
+        deduped, calls = _responses_and_calls(df, "text", 0.0)
     finally:
         spark.conf.set(key, saved)
     assert deduped == plain
     assert plain[0] == mock_response(build_prompt(SYS, "None"))
-    assert enrich_mod._LIVE_ACCUMULATORS[-1].value == 14
+    assert (calls, plain_calls) == (14, 500)
 
 
 @pytest.mark.parametrize("dtype", ["long", "int"])
 def test_integer_input_prompts_one_text_per_value(spark, dtype):
     """An integer column with a NULL over 4-row Arrow batches: the batch
     holding the NULL reaches pandas as float64, yet every value is
-    prompted as str(v) and the NULL as "None", on both paths."""
+    prompted as str(v) and the NULL as "None", at both temperatures; at
+    0 each of the 4 prompts is called once."""
     vals = [None if i == 5 else i % 3 for i in range(12)]
     df = spark.createDataFrame(list(enumerate(vals)), f"id long, n {dtype}")
     key = "spark.sql.execution.arrow.maxRecordsPerBatch"
     saved = spark.conf.get(key)
     spark.conf.set(key, "4")
     try:
-        got = {
-            dedupe: dict(
-                enrich(df, "n", EnrichConfig(system_prompt=SYS, dedupe_inputs=dedupe))
-                .select("id", "Response")
-                .collect()
-            )
-            for dedupe in (False, True)
-        }
+        got = {t: _responses_and_calls(df, "n", t) for t in (0.7, 0.0)}
     finally:
         spark.conf.set(key, saved)
-    assert got[True] == got[False]
-    assert got[False] == {
+    assert got[0.0][0] == got[0.7][0]
+    assert got[0.7][0] == {
         i: mock_response(build_prompt(SYS, str(v))) for i, v in enumerate(vals)
     }
+    assert (got[0.0][1], got[0.7][1]) == (4, 12)
 
 
-@pytest.mark.parametrize("dedupe", [False, True], ids=["plain", "dedupe"])
-def test_kernel_keeps_the_call_cap_full_across_batches(monkeypatch, dedupe):
+@TEMPERATURES
+def test_kernel_keeps_the_call_cap_full_across_batches(monkeypatch, temperature):
     """Twelve sorted 5-row batches of two texts each, cap 8: the kernel
     queues later batches' calls while it awaits the oldest batch, so the
-    cap is reached; one event loop per batch would peak at 2 (dedupe) or
-    5 (plain) calls in flight."""
+    cap is reached; one event loop per batch would peak at 2 (temperature
+    0) or 5 (0.7) calls in flight."""
     live = peak = 0
     make = enrich_mod._make_transport
 
@@ -175,13 +189,13 @@ def test_kernel_keeps_the_call_cap_full_across_batches(monkeypatch, dedupe):
 
     monkeypatch.setattr(enrich_mod, "_make_transport", counting_transport)
     cfg = EnrichConfig(
-        system_prompt=SYS, concurrency=8, mock_latency=0.02, dedupe_inputs=dedupe
+        system_prompt=SYS, concurrency=8, mock_latency=0.02, temperature=temperature
     )
     batches = [pd.Series([f"{b:02d}a"] * 3 + [f"{b:02d}b"] * 2) for b in range(12)]
     counts = []
     out = list(enrich_mod._enrich_batches(iter(batches), cfg, counts.append))
     assert peak == 8
-    assert sum(counts) == (24 if dedupe else 60)
+    assert sum(counts) == (24 if temperature == 0 else 60)
     assert [len(o) for o in out] == [5] * 12
     assert pd.concat(out)["response"].tolist() == [
         mock_response(build_prompt(SYS, t)) for b in batches for t in b

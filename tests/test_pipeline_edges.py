@@ -1,8 +1,8 @@
 """Enrichment-pipeline edge cases (SURVEY §2A ops 3/12/13/14): empty
 input, limit boundaries, output-file shape at the extremes, the enrich
-stage's one-wave topology over 1,000-row batches, the dedupe path's
-width, the single-consumer job shape, the release of the row-id pin,
-exact error reports on all-failing and multi-split inputs, and the
+stage's one-wave topology over 1,000-row batches, shared calls at
+temperature 0, the single-consumer job shape, the release of the row-id
+pin, exact error reports on all-failing and multi-split inputs, and the
 swallowed webhook failure."""
 
 from __future__ import annotations
@@ -94,9 +94,9 @@ def test_single_enriched_row_boundary(spark, tmp_path):
     assert all(r["Response"] == "" for r in rows[1:])
 
 
-def _map_stage_tasks(spark, group: str) -> int:
-    """Tasks of the first stage in ``group`` that ran the enrich map
-    (the plan's ArrowEvalPython node), read from the status store; later
+def _map_stage(spark, group: str):
+    """The first stage in ``group`` that ran the enrich map (the plan's
+    ArrowEvalPython node), as the status store's stage data; later
     stages over the persisted output show the node too but read cached
     blocks. Stages the store has already evicted (past
     ``spark.ui.retainedStages``, skipped stages first) are passed over:
@@ -112,13 +112,13 @@ def _map_stage_tasks(spark, group: str) -> int:
         for sid in tracker.getJobInfo(job).stageIds
     )
     for sid in stages:
-        info = tracker.getStageInfo(sid)
-        if info is None:
+        if tracker.getStageInfo(sid) is None:
             continue
-        if store.lastStageAttempt(sid).status().toString() != "COMPLETE":
+        stage = store.lastStageAttempt(sid)
+        if stage.status().toString() != "COMPLETE":
             continue
         if 'label="ArrowEvalPython"' in dot(store.operationGraphForStage(sid)):
-            return info.numTasks
+            return stage
     raise AssertionError(f"no enrich stage in job group {group!r}")
 
 
@@ -140,12 +140,13 @@ def test_enrich_topology(head_rows, slots, concurrency, width, per_task):
 
 
 def _run_in_group(
-    spark, tmp_path, src, max_rows, group, dedupe=False, fails=frozenset()
+    spark, tmp_path, src, max_rows, group, temperature=0.0, fails=frozenset()
 ):
-    """Run the pipeline under job group ``group``; return the result and
-    its output rows. Inputs in ``fails`` fail at once (one attempt)."""
+    """Run the pipeline under job group ``group`` at ``temperature``;
+    return the result and its output rows. Inputs in ``fails`` fail at
+    once (one attempt)."""
     spec = _spec(src, max_rows)
-    spec.enrich.dedupe_inputs = dedupe
+    spec.temperature = temperature
     if fails:
         spec.enrich.mock_fail_inputs = frozenset(fails)
         spec.enrich.retries = 1
@@ -160,23 +161,33 @@ def _run_in_group(
         return res, list(csv.DictReader(f))
 
 
+_BATCH_CASES = [
+    (2500, 2300, 3),
+    (2500, 1000, 1),
+    (2500, 10_000, 3),
+    (5500, 5500, 6),
+    # more batches than the test session's 8 slots: folded
+    (9500, 9500, 10),
+]
+
+
 @pytest.mark.parametrize(
-    "n, max_rows, batches",
-    [
-        (2500, 2300, 3),
-        (2500, 1000, 1),
-        (2500, 10_000, 3),
-        (5500, 5500, 6),
-        # more batches than the test session's 8 slots: folded
-        (9500, 9500, 10),
-    ],
-    ids=["2300-3", "1000-1", "10000-3", "5500-6", "9500-10"],
+    "n, max_rows, batches, temperature",
+    [(*c, 0.0) for c in _BATCH_CASES] + [(*c, 0.7) for c in _BATCH_CASES],
+    ids=[f"{c[1]}-{c[2]}" for c in _BATCH_CASES]
+    + [f"{c[1]}-{c[2]}-t0.7" for c in _BATCH_CASES],
 )
-def test_enrich_runs_in_1000_row_batches(spark, tmp_path, n, max_rows, batches):
+def test_enrich_runs_in_1000_row_batches(
+    spark, tmp_path, n, max_rows, batches, temperature
+):
     """A single-split CSV's head runs as min(ceil(head_rows / 1000),
     slots) enrich tasks, one wave, with the output of the one-task plan
-    and the paid map run exactly once."""
-    src = _write_csv(tmp_path / "w.csv", [[i, f"t{i % 700}", i] for i in range(n)])
+    and the paid map run exactly once: at temperature 0 once per
+    distinct head prompt, at 0.7 once per head row."""
+    distinct = 700
+    src = _write_csv(
+        tmp_path / "w.csv", [[i, f"t{i % distinct}", i] for i in range(n)]
+    )
     raw = read_csv(spark, src)
     assert raw.rdd.getNumPartitions() == 1
 
@@ -188,44 +199,51 @@ def test_enrich_runs_in_1000_row_batches(spark, tmp_path, n, max_rows, batches):
         .collect()
     )
 
-    group = f"enrich-width-{n}-{max_rows}"
-    res, rows = _run_in_group(spark, tmp_path, src, max_rows, group)
+    group = f"enrich-width-{n}-{max_rows}-{temperature}"
+    res, rows = _run_in_group(spark, tmp_path, src, max_rows, group, temperature)
 
     # the stage also computes the passthrough tail: one more task (its
     # single split), empty when max_rows covers the whole input
     width = min(batches, spark.sparkContext.defaultParallelism)
-    assert _map_stage_tasks(spark, group) == width + 1
-    # every head row enriched once: the round-robin shuffle and the
-    # sort's sampling job did not re-run the paid map
-    assert enrich_mod._LIVE_ACCUMULATORS[-1].value == min(max_rows, n)
+    stage = _map_stage(spark, group)
+    assert stage.numTasks() == width + 1
+    # a one-task head is enriched straight off the scan, unshuffled
+    assert (stage.shuffleReadBytes() > 0) == (width > 1)
+    # every distinct head prompt (temperature 0) or head row enriched
+    # once: the spread and the sink did not re-run the paid map
+    head_rows = min(max_rows, n)
+    calls = min(head_rows, distinct) if temperature == 0 else head_rows
+    assert enrich_mod._LIVE_ACCUMULATORS[-1].value == calls
     assert res.row_count == n
     assert [r["id"] for r in rows] == [str(i) for i in range(n)]
     assert [r["Response"] for r in rows] == [one_task.get(i, "") for i in range(n)]
 
 
 def test_dedupe_runs_distinct_inputs_at_full_width(spark, tmp_path):
-    """AQE must not coalesce the co-partitioned inputs into one enrich
-    task: the head runs as defaultParallelism tasks (plus the tail's
-    split in the same stage), each text enriched once, in at most the
-    plain run's 7 jobs, with the output and error report of the
-    non-dedupe run."""
+    """At temperature 0 the head is co-partitioned at the topology's
+    width, which AQE must not coalesce into one enrich task: the head
+    runs as width tasks (plus the tail's split in the same stage), each
+    text enriched once, in at most the plain run's 7 jobs, with the
+    output bytes and error report of the temperature-0.7 run, which
+    calls every row."""
     n, distinct = 3000, 700
     src = _write_csv(
         tmp_path / "d.csv", [[i, f"t{i % distinct}", i] for i in range(n)]
     )
     fails = {"t3", "t500"}
-    plain_res, plain = _run_in_group(
-        spark, tmp_path, src, n, "enrich-plain", fails=fails
+    plain_res, _ = _run_in_group(
+        spark, tmp_path, src, n, "enrich-plain", temperature=0.7, fails=fails
     )
-    res, deduped = _run_in_group(
-        spark, tmp_path, src, n, "enrich-dedupe", dedupe=True, fails=fails
-    )
+    plain_calls = enrich_mod._LIVE_ACCUMULATORS[-1].value
+    res, _ = _run_in_group(spark, tmp_path, src, n, "enrich-dedupe", fails=fails)
 
     sc = spark.sparkContext
-    assert _map_stage_tasks(spark, "enrich-dedupe") == sc.defaultParallelism + 1
+    width, _ = enrich_topology(n, sc.defaultParallelism, 20)
+    assert _map_stage(spark, "enrich-dedupe").numTasks() == width + 1
     assert len(sc.statusTracker().getJobIdsForGroup("enrich-dedupe")) <= 7
-    assert enrich_mod._LIVE_ACCUMULATORS[-1].value == distinct
-    assert deduped == plain
+    assert (enrich_mod._LIVE_ACCUMULATORS[-1].value, plain_calls) == (distinct, n)
+    with open(res.output_path, "rb") as f, open(plain_res.output_path, "rb") as g:
+        assert f.read() == g.read()
     assert res.error_indexes == plain_res.error_indexes != []
 
 

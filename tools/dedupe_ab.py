@@ -1,15 +1,17 @@
 #!/usr/bin/env python
-"""By-hand A/B of the enrichment pipeline's dedupe path, one variant per
+"""By-hand A/B of the enrichment pipeline's shared calls, one variant per
 fresh process.
 
-No benchmark workload sets ``dedupe_inputs``, so a change to the dedupe
-path is measured with this tool: run each variant (a checkout's engine,
-dedupe on or off) in its own process, interleave the variants over
-seeds, rotate which goes first, and compare median per-call seconds.
+At temperature 0 the pipeline pays each distinct prompt once; the
+listed ``enrich-batch`` workload measures that on one input, this tool
+on inputs where the share of repeated texts and hot texts differ. Run
+each variant (a checkout's engine at one temperature) in its own
+process, interleave the variants over seeds, rotate which goes first,
+and compare median per-call seconds.
 
-  python tools/dedupe_ab.py --root DIR --dedupe 1 --case hot --seed 7
+  python tools/dedupe_ab.py --root DIR --temperature 0 --case hot --seed 7
 
-Cases (the share of repeated inputs decides what dedupe saves):
+Cases (the share of repeated inputs decides what sharing saves):
 
   enrich-batch  perfbench's enrich-batch input (8,000 rows, about half
                 the head's texts repeat, 10 ms mock latency);
@@ -20,9 +22,14 @@ Cases (the share of repeated inputs decides what dedupe saves):
 
 ``--root`` is the checkout whose engine and ``perfbench/run.py`` are
 imported (default: this one), so a parent commit extracted elsewhere
-runs its own code. Prints one JSON line: median and per-call seconds,
-the last call's LLM calls and the output CSV's md5, which must match
-across variants.
+runs its own code. A checkout whose ``EnrichConfig`` still has the
+opt-in ``dedupe_inputs`` flag (before temperature 0 shared calls) gets
+it set at temperature 0, so both sides pay one call per distinct
+prompt. At temperature 0.7 ``repeat1000`` makes 150,000 calls of 0.5 s.
+
+Prints one JSON line: median and per-call seconds, the last call's LLM
+calls, the enrich stage's task count and its slowest and median task
+seconds, and the output CSV's md5, which must match across variants.
 """
 
 from __future__ import annotations
@@ -58,10 +65,46 @@ def write_wide_csv(path: str, case: str, seed: int) -> None:
             f.write(f"{i},{text},{fill}\n")
 
 
+def enrich_task_seconds(sc, group: str) -> dict:
+    """Task count and slowest and median task seconds of the head's
+    enrich tasks in job group ``group``, read from the status store:
+    the tasks of the stage that ran the enrich map (its ArrowEvalPython
+    node) that read the head's spread shuffle; the stage's other tasks
+    pass the tail through."""
+    jsc = sc._jsc.sc()
+    jsc.listenerBus().waitUntilEmpty()
+    tracker, store = sc.statusTracker(), jsc.statusStore()
+    dot = sc._jvm.org.apache.spark.ui.scope.RDDOperationGraph.makeDotFile
+    for job in sorted(tracker.getJobIdsForGroup(group)):
+        for sid in sorted(tracker.getJobInfo(job).stageIds):
+            if tracker.getStageInfo(sid) is None:  # skipped or evicted
+                continue
+            stage = store.lastStageAttempt(sid)
+            if stage.status().toString() != "COMPLETE":
+                continue
+            if 'label="ArrowEvalPython"' not in dot(store.operationGraphForStage(sid)):
+                continue
+            tasks = store.taskList(sid, stage.attemptId(), 1 << 30)
+            tasks = [tasks.apply(i) for i in range(tasks.size())]
+            secs = sorted(
+                t.duration().get() / 1000
+                for t in tasks
+                if t.taskMetrics().get().shuffleReadMetrics().recordsRead()
+            )
+            if not secs:  # a one-task head reads no shuffle
+                return {}
+            return {
+                "tasks": len(secs),
+                "max": round(secs[-1], 3),
+                "median": round(statistics.median(secs), 3),
+            }
+    return {}
+
+
 def main() -> None:
     ap = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
     ap.add_argument("--root", default=HERE)
-    ap.add_argument("--dedupe", type=int, choices=(0, 1), required=True)
+    ap.add_argument("--temperature", type=float, required=True)
     ap.add_argument(
         "--case", choices=("enrich-batch", "repeat1000", "hot"), required=True
     )
@@ -92,6 +135,13 @@ def main() -> None:
                 ),
             },
         )
+
+        def set_temperature(s: PipelineSpec) -> PipelineSpec:
+            s.temperature = args.temperature
+            if hasattr(s.enrich, "dedupe_inputs"):
+                s.enrich.dedupe_inputs = args.temperature == 0
+            return s
+
         if args.case == "enrich-batch":
             import numpy as np
             import workloads
@@ -102,9 +152,7 @@ def main() -> None:
             wl.setup()
 
             def spec(k: int) -> PipelineSpec:
-                s = wl.spec(k)
-                s.enrich.dedupe_inputs = bool(args.dedupe)
-                return s
+                return set_temperature(wl.spec(k))
 
             src = None
         else:
@@ -120,13 +168,13 @@ def main() -> None:
                     system_prompt="classify",
                     file_name=f"out{k}",
                 )
-                s.enrich = em.EnrichConfig(
-                    mock_latency=latency, dedupe_inputs=bool(args.dedupe)
-                )
-                return s
+                s.enrich = em.EnrichConfig(mock_latency=latency)
+                return set_temperature(s)
 
         walls, digests = [], set()
+        sc = spark.sparkContext
         for k in range(args.calls + 1):  # call 0 warms up
+            sc.setJobGroup(f"dedupe-ab-{k}", "dedupe A/B call")
             t0 = time.monotonic()
             res = run_enrichment_pipeline(spark, spec(k), os.path.join(work, "out"))
             if k:
@@ -137,13 +185,14 @@ def main() -> None:
             json.dumps(
                 {
                     "root": root,
-                    "dedupe": bool(args.dedupe),
+                    "temperature": args.temperature,
                     "case": args.case,
                     "seed": args.seed,
                     "median_s": statistics.median(walls),
                     "walls": walls,
                     "calls": em._LIVE_ACCUMULATORS[-1].value,
                     "rows": res.row_count,
+                    "enrich_task_s": enrich_task_seconds(sc, f"dedupe-ab-{k}"),
                     "output_md5": sorted(digests),
                 }
             )

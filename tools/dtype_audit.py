@@ -38,7 +38,6 @@ import os
 import sys
 
 import duckdb
-import pandas as pd
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
