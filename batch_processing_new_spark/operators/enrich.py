@@ -34,11 +34,14 @@ optimization the reference lacks (SURVEY.md §4.2). The kernel calls
 each Arrow batch's distinct texts once and carries the last text's call
 into the next batch, so memory stays a few batches at any scale. On
 input laid out by ``co_partition()`` (hash-partitioned and sorted on the
-prompted text, so equal prompts are adjacent in one task) that is one
-call per distinct prompt; on any other layout it is at most one per
-distinct prompt per batch. The key is the string-coerced text, i.e. the
-prompt itself, so NULL inputs share the one ``str(None)`` prompt. At
-any other temperature every row gets its own call, as in the reference.
+input value, so equal values are adjacent in one task) that is one call
+per distinct input value; on any other layout it is at most one per
+distinct prompt per batch. The kernel's key is the string-coerced text,
+i.e. the prompt itself, so NULL inputs share the one ``str(None)``
+prompt. Unequal values with one prompt (a NULL and the text ``"None"``;
+a NULL and a NaN in a float column) may sit apart, and then each pays a
+call. At any other temperature every row gets its own call, as in the
+reference.
 
 Scale notes:
 - The operator is an optimizer barrier by construction (Python UDF); keep
@@ -397,9 +400,10 @@ def prompt_cells(df: DataFrame, input_col: str) -> Column:
 
 
 def co_partition(df: DataFrame, input_col: str, width: int) -> DataFrame:
-    """``df`` in ``width`` partitions with equal prompts of ``input_col``
+    """``df`` in ``width`` partitions with equal values of ``input_col``
     in one partition and adjacent: the layout on which ``enrich()`` at
-    temperature 0 calls each distinct prompt once. An explicit count,
+    temperature 0 calls each distinct input value once (module
+    docstring). An explicit count,
     which AQE never coalesces, keeps the full width."""
     cells = prompt_cells(df, input_col)
     return df.repartition(width, cells).sortWithinPartitions(cells)
@@ -423,7 +427,7 @@ def enrich(
     ``response_col`` (plus optionally the typed ``_enrich`` result
     struct with error/attempts/latency). The input's partitioning is
     kept; at ``cfg.temperature == 0`` equal prompts share a call, once
-    per distinct prompt on input laid out by ``co_partition()``.
+    per distinct input value on input laid out by ``co_partition()``.
     """
     from batch_processing_new_spark.shipping import ensure_package_on_executors
 

@@ -78,7 +78,7 @@ def q31_enrich_dedupe(spark: SparkSession, sf_dir: str) -> DataFrame:
     temperature 0 equal prompts share a call, and ``co_partition`` (the
     enrichment pipeline's temperature-0 spread) puts rows with equal
     ``lang`` adjacent in one task, so the kernel calls once per distinct
-    prompt and maps the result onto every row. The oracle proves no row
+    ``lang`` and maps the result onto every row. The oracle proves no row
     is lost, duplicated or given another input's response.
     """
     d = load_table(spark, sf_dir, "documents").select("doc_id", "lang")

@@ -24,13 +24,15 @@ repartitioned: a shuffle would only add cost to a one-batch job.
 The spread depends on the request's temperature. At temperature 0 the
 answer depends only on the prompt, so the enrich kernel shares one call
 among equal prompts (``operators/enrich.py``), and the spread is
-``co_partition``: hash-partitioned and sorted on the prompted text, so
-equal prompts are adjacent in one task and each distinct prompt is
+``co_partition``: hash-partitioned and sorted on the input value, so
+equal values are adjacent in one task and each distinct input value is
 called once per request. A one-task head shares calls within each
 Arrow batch. At any other temperature every row is called, and the
 spread is a round-robin ``repartition(width)``, which balances rows
-whatever the texts; a text that fills much of a temperature-0 head
-makes its task the stage's longest, though it is called once.
+whatever the texts: there a hash spread would put every call of a hot
+text in one task (``tools/dedupe_ab.py --case hot``, 30% NULL texts,
+ran about 1.8 times as long). A text that fills much of a temperature-0
+head makes its task the stage's longest, though it is called once.
 
 Parity contract (SURVEY.md §2A.1): output rows == input rows, output
 order == input order, schema == input + 'Response', rows >= max_rows get

@@ -29,6 +29,7 @@ from batch_processing_new_spark.plans.pipeline import (
     run_enrichment_pipeline,
 )
 from batch_processing_new_spark.sources.readers import read_csv, with_ingest_row_id
+from tests.spark_stages import enrich_map_stage
 
 
 def _spec(url: str, max_rows: int) -> PipelineSpec:
@@ -92,34 +93,6 @@ def test_single_enriched_row_boundary(spark, tmp_path):
         rows = list(csv.DictReader(f))
     assert rows[0]["Response"].startswith("resp::")
     assert all(r["Response"] == "" for r in rows[1:])
-
-
-def _map_stage(spark, group: str):
-    """The first stage in ``group`` that ran the enrich map (the plan's
-    ArrowEvalPython node), as the status store's stage data; later
-    stages over the persisted output show the node too but read cached
-    blocks. Stages the store has already evicted (past
-    ``spark.ui.retainedStages``, skipped stages first) are passed over:
-    the map stage has just completed and is kept."""
-    sc = spark.sparkContext
-    jsc = sc._jsc.sc()
-    jsc.listenerBus().waitUntilEmpty()
-    tracker, store = sc.statusTracker(), jsc.statusStore()
-    dot = sc._jvm.org.apache.spark.ui.scope.RDDOperationGraph.makeDotFile
-    stages = sorted(
-        sid
-        for job in tracker.getJobIdsForGroup(group)
-        for sid in tracker.getJobInfo(job).stageIds
-    )
-    for sid in stages:
-        if tracker.getStageInfo(sid) is None:
-            continue
-        stage = store.lastStageAttempt(sid)
-        if stage.status().toString() != "COMPLETE":
-            continue
-        if 'label="ArrowEvalPython"' in dot(store.operationGraphForStage(sid)):
-            return stage
-    raise AssertionError(f"no enrich stage in job group {group!r}")
 
 
 @pytest.mark.parametrize(
@@ -205,7 +178,7 @@ def test_enrich_runs_in_1000_row_batches(
     # the stage also computes the passthrough tail: one more task (its
     # single split), empty when max_rows covers the whole input
     width = min(batches, spark.sparkContext.defaultParallelism)
-    stage = _map_stage(spark, group)
+    stage = enrich_map_stage(spark.sparkContext, group)
     assert stage.numTasks() == width + 1
     # a one-task head is enriched straight off the scan, unshuffled
     assert (stage.shuffleReadBytes() > 0) == (width > 1)
@@ -239,7 +212,8 @@ def test_dedupe_runs_distinct_inputs_at_full_width(spark, tmp_path):
 
     sc = spark.sparkContext
     width, _ = enrich_topology(n, sc.defaultParallelism, 20)
-    assert _map_stage(spark, "enrich-dedupe").numTasks() == width + 1
+    stage = enrich_map_stage(sc, "enrich-dedupe")
+    assert stage.numTasks() == width + 1
     assert len(sc.statusTracker().getJobIdsForGroup("enrich-dedupe")) <= 7
     assert (enrich_mod._LIVE_ACCUMULATORS[-1].value, plain_calls) == (distinct, n)
     with open(res.output_path, "rb") as f, open(plain_res.output_path, "rb") as g:

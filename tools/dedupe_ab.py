@@ -2,7 +2,7 @@
 """By-hand A/B of the enrichment pipeline's shared calls, one variant per
 fresh process.
 
-At temperature 0 the pipeline pays each distinct prompt once; the
+At temperature 0 the pipeline pays each distinct input once; the
 listed ``enrich-batch`` workload measures that on one input, this tool
 on inputs where the share of repeated texts and hot texts differ. Run
 each variant (a checkout's engine at one temperature) in its own
@@ -45,6 +45,10 @@ import sys
 import time
 
 HERE = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+# this checkout's helper, whichever checkout --root points at
+sys.path.insert(0, HERE)
+from tests.spark_stages import enrich_map_stage  # noqa: E402
+
 WIDE_ROWS = 150_000
 
 
@@ -67,38 +71,25 @@ def write_wide_csv(path: str, case: str, seed: int) -> None:
 
 def enrich_task_seconds(sc, group: str) -> dict:
     """Task count and slowest and median task seconds of the head's
-    enrich tasks in job group ``group``, read from the status store:
-    the tasks of the stage that ran the enrich map (its ArrowEvalPython
-    node) that read the head's spread shuffle; the stage's other tasks
-    pass the tail through."""
-    jsc = sc._jsc.sc()
-    jsc.listenerBus().waitUntilEmpty()
-    tracker, store = sc.statusTracker(), jsc.statusStore()
-    dot = sc._jvm.org.apache.spark.ui.scope.RDDOperationGraph.makeDotFile
-    for job in sorted(tracker.getJobIdsForGroup(group)):
-        for sid in sorted(tracker.getJobInfo(job).stageIds):
-            if tracker.getStageInfo(sid) is None:  # skipped or evicted
-                continue
-            stage = store.lastStageAttempt(sid)
-            if stage.status().toString() != "COMPLETE":
-                continue
-            if 'label="ArrowEvalPython"' not in dot(store.operationGraphForStage(sid)):
-                continue
-            tasks = store.taskList(sid, stage.attemptId(), 1 << 30)
-            tasks = [tasks.apply(i) for i in range(tasks.size())]
-            secs = sorted(
-                t.duration().get() / 1000
-                for t in tasks
-                if t.taskMetrics().get().shuffleReadMetrics().recordsRead()
-            )
-            if not secs:  # a one-task head reads no shuffle
-                return {}
-            return {
-                "tasks": len(secs),
-                "max": round(secs[-1], 3),
-                "median": round(statistics.median(secs), 3),
-            }
-    return {}
+    enrich tasks in job group ``group``: the enrich stage's tasks that
+    read the head's spread shuffle; its other task passes the tail
+    through."""
+    stage = enrich_map_stage(sc, group)
+    store = sc._jsc.sc().statusStore()
+    tasks = store.taskList(stage.stageId(), stage.attemptId(), 1 << 30)
+    tasks = [tasks.apply(i) for i in range(tasks.size())]
+    secs = sorted(
+        t.duration().get() / 1000
+        for t in tasks
+        if t.taskMetrics().get().shuffleReadMetrics().recordsRead()
+    )
+    if not secs:  # a one-task head reads no shuffle
+        return {}
+    return {
+        "tasks": len(secs),
+        "max": round(secs[-1], 3),
+        "median": round(statistics.median(secs), 3),
+    }
 
 
 def main() -> None:
