@@ -356,8 +356,7 @@ def q82_top_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     d = load_table(spark, sf_dir, "documents")
     counted = (
-        fan_out(d.select("text"))
-        .select(F.explode(tokens(F.col("text"))).alias("token"))
+        d.select(F.explode(tokens(F.col("text"))).alias("token"))
         .groupBy("token")
         .agg(F.count("*").alias("n"))
     )
@@ -422,7 +421,9 @@ def q83_dup_ngram_fraction(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
     # tokens projected to a real column first: referencing the split
     # expression inside the transform lambda would re-tokenize the
-    # document once per gram — O(len^2) (see text_funcs.shingles_of)
+    # document once per gram — O(len^2) (see text_funcs.shingles_of).
+    # fan_out pays here: the gram chain on 4 tasks beat one row group
+    # in 10/10 rounds (per-site A/B, TUNING.md "Scan-stage parallelism")
     toked = fan_out(d.select("doc_id", "text")).select(
         "doc_id", tokens(F.col("text")).alias("_toks")
     )
@@ -1573,7 +1574,7 @@ def q157_jackknife_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
     engine's portable hash, so the oracle assigns identical shards.
     """
     from batch_processing_new_spark.functions.text_funcs import hash60
-    from batch_processing_new_spark.operators.relational import DEC, dsum
+    from batch_processing_new_spark.operators.relational import DEC
 
     o = load_table(spark, sf_dir, "orders")
     per_shard = (

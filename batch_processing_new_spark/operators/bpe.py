@@ -43,7 +43,7 @@ from pyspark.sql import functions as F
 
 from batch_processing_new_spark.functions.text_funcs import tokens
 from batch_processing_new_spark.registry import query
-from batch_processing_new_spark.sources.readers import fan_out, load_table
+from batch_processing_new_spark.sources.readers import load_table
 
 N_MERGES = 12
 _EOW = "</w>"  # end-of-word marker: lets merges learn suffixes
@@ -217,8 +217,7 @@ def q169_bpe_vocab(spark: SparkSession, sf_dir: str) -> DataFrame:
     (merge_rank, left, right, pair_count), in learned order."""
     d = load_table(spark, sf_dir, "documents")
     words = (
-        fan_out(d.select("text"))
-        .select(F.explode(tokens(F.col("text"))).alias("word"))
+        d.select(F.explode(tokens(F.col("text"))).alias("word"))
         .where(F.col("word") != "")
         .groupBy("word")
         .agg(F.count("*").alias("cnt"))
@@ -268,8 +267,7 @@ def q180_bpe_tokenize_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     d = load_table(spark, sf_dir, "documents")
     words = (
-        fan_out(d.select("text"))
-        .select(F.explode(tokens(F.col("text"))).alias("word"))
+        d.select(F.explode(tokens(F.col("text"))).alias("word"))
         .where(F.col("word") != "")
         .groupBy("word")
         .agg(F.count("*").alias("cnt"))

@@ -37,9 +37,6 @@ from pyspark.sql import functions as F
 from batch_processing_new_spark.operators.similarity import _f64, dot
 from batch_processing_new_spark.registry import query
 from batch_processing_new_spark.sources.readers import (
-    FANOUT_PY_TASK_BYTES,
-    fan_out,
-    load_table,
     load_vectors,
     pin_before_sort,
 )
@@ -154,12 +151,10 @@ def lloyd_kmeans(
     rounded 6, empty clusters keep their previous centroid. Only
     k x dim floats return to the driver per round.
     """
-    # Python-kernel consumer -> coarse fan_out slices (see fan_out doc):
-    # every Lloyd pass is mapInPandas, so per-task boundary overhead
-    # dominates at fine widths (measured 128 KiB ~35% faster at sf0.1)
-    vecs = fan_out(
-        emb.select("vec_id", "embedding"), task_bytes=FANOUT_PY_TASK_BYTES
-    ).localCheckpoint(eager=False)
+    # no fan_out: every Lloyd pass is mapInPandas, and on a 4-core host
+    # one task per row group beat a spread scan (per-site A/B, TUNING.md
+    # "Scan-stage parallelism")
+    vecs = emb.select("vec_id", "embedding").localCheckpoint(eager=False)
     # seeds state the SAME contract as the oracle's c0 (vec_id < k):
     # orderBy().limit(k) silently diverges on any fixture whose ids
     # are not exactly 0..k-1
@@ -446,8 +441,8 @@ def q160_embedding_covariance(spark: SparkSession, sf_dir: str) -> DataFrame:
     n = e.count()
     v = F.transform(F.col("embedding"), lambda x: x.cast("double"))
     # the projected vector table is shared by BOTH branches (pair sums
-    # and means) — materialize once so the scan + fan_out run once
-    vecs = fan_out(e.select(v.alias("v"))).localCheckpoint(eager=False)
+    # and means) — materialize once so the scan runs once
+    vecs = e.select(v.alias("v")).localCheckpoint(eager=False)
     pairs = (
         vecs.select(F.posexplode("v").alias("i", "xi"), F.col("v"))
         .select(

@@ -26,7 +26,7 @@ from pyspark.sql import functions as F
 
 from batch_processing_new_spark.functions.text_funcs import tokens
 from batch_processing_new_spark.registry import query
-from batch_processing_new_spark.sources.readers import fan_out, load_table
+from batch_processing_new_spark.sources.readers import load_table
 
 _N = 5  # n-gram width, matches q83/q95's corpus-hygiene convention
 _MIN_DOCS = 2  # report grams seen in at least this many documents
@@ -77,7 +77,7 @@ def q146_cross_doc_ngrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     join, which is the proven-scalable shape for corpus n-gram work.
     """
     d = load_table(spark, sf_dir, "documents")
-    toked = fan_out(d.select("doc_id", "text")).select(
+    toked = d.select(
         "doc_id", tokens(F.col("text")).alias("_toks")
     )
     toks = F.col("_toks")
@@ -200,8 +200,7 @@ def q161_source_vocab_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     from batch_processing_new_spark.functions.text_funcs import distinct_tokens
 
     vocab = (
-        fan_out(d.select("source", "text"))
-        .select("source", F.explode(distinct_tokens(F.col("text"))).alias("term"))
+        d.select("source", F.explode(distinct_tokens(F.col("text"))).alias("term"))
         .distinct()
     )
     sizes = vocab.groupBy("source").agg(F.count(F.lit(1)).alias("n"))

@@ -38,7 +38,6 @@ from batch_processing_new_spark.functions.text_funcs import (
 )
 from batch_processing_new_spark.registry import query
 from batch_processing_new_spark.sources.readers import (
-    fan_out,
     load_table,
     pin_before_sort,
 )
@@ -149,7 +148,7 @@ def q35_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     (without a block key, drop stop-shingles / use MinHash-LSH, q37).
     """
     d = load_table(spark, sf_dir, "documents")
-    tok = fan_out(d.select("doc_id", "source", "text")).select(
+    tok = d.select(
         "doc_id", "source", F.explode(distinct_tokens(F.col("text"))).alias("t")
     )
     sizes = tok.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
@@ -195,7 +194,7 @@ def _minhash_signatures(
     """
     if elements is None:
         elements = distinct_tokens(F.col("text"))
-    tok = fan_out(docs).select("doc_id", F.explode(elements).alias("t"))
+    tok = docs.select("doc_id", F.explode(elements).alias("t"))
     return (
         tok.select(
             "doc_id",
@@ -299,7 +298,7 @@ def _shingle_sets(docs: DataFrame) -> DataFrame:
     )
 
     return (
-        fan_out(docs.select("doc_id", "text").where(F.col("text").isNotNull()))
+        docs.select("doc_id", "text").where(F.col("text").isNotNull())
         .selectExpr("doc_id", f"{tokens_spark_sql('text')} AS _toks")
         .selectExpr("doc_id", f"{shingles_of_spark_sql('_toks')} AS toks")
         .localCheckpoint(eager=False)
@@ -481,7 +480,7 @@ def simhash_expr(docs: DataFrame, text_col: str = "text") -> DataFrame:
     via explode(sequence(0,59)), two partial-agg groupBys. Kept as the
     all-JVM reference implementation; `simhash` must match it exactly
     (tests/test_dedup.py)."""
-    tok = fan_out(docs.select("doc_id", text_col)).select(
+    tok = docs.select(
         "doc_id", F.explode(distinct_tokens(F.col(text_col))).alias("t")
     ).withColumn("h", hash60(F.col("t")))
     votes = (

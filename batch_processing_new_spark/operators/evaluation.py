@@ -26,7 +26,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from batch_processing_new_spark.registry import query
-from batch_processing_new_spark.sources.readers import fan_out, load_table
+from batch_processing_new_spark.sources.readers import load_table
 
 # the q25 heuristic restated (shared contract, see text_analysis.q25)
 _PRED_SQL = """
@@ -101,7 +101,7 @@ def q192_annotator_agreement(spark: SparkSession, sf_dir: str) -> DataFrame:
     groupBy(label, pred). All floats derive from exact counts.
     """
     d = load_table(spark, sf_dir, "documents")
-    pairs = fan_out(d.select("text", "lang")).select(
+    pairs = d.select(
         F.col("lang").alias("label"), _pred_col().alias("pred")
     )
     cells = pairs.groupBy("label", "pred").agg(F.count("*").alias("n"))
@@ -220,7 +220,7 @@ def q193_precision_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents").where(
         F.col("text").isNotNull()
     )
-    judged = fan_out(d.select("doc_id", "text", "n_chars")).select(
+    judged = d.select(
         F.when(_cls_p_good(F.col("text")) > 0.5, 1).otherwise(0).alias("pred"),
         F.when(F.expr(_PR_LABEL_SQL), 1).otherwise(0).alias("label"),
     )

@@ -27,7 +27,7 @@ from pyspark.sql import functions as F
 
 from batch_processing_new_spark.functions.timekit import epoch_micros
 from batch_processing_new_spark.registry import query
-from batch_processing_new_spark.sources.readers import fan_out, load_table
+from batch_processing_new_spark.sources.readers import load_table
 
 # Exact, order-insensitive SUM over a double expression (see module doc).
 DEC = "decimal(30,8)"
@@ -81,20 +81,13 @@ def q01_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem")
     disc_price = F.col("l_extendedprice") * (1 - F.col("l_discount"))
     charge = disc_price * (1 + F.col("l_tax"))
-    # fan_out the 6 needed columns ahead of the DECIMAL partial agg: the
-    # exact-sum casts are the expensive per-row work here, and a
-    # single-row-group file otherwise runs them all on one task
-    # (interleaved A/B at sf0.1: 1.37 s -> 1.05 s, identical values;
-    # no-op at scale where the scan is already wide)
-    pre = fan_out(
-        li.where(F.col("l_shipdate") <= "1998-09-02 00:00:00").select(
-            "l_quantity",
-            "l_extendedprice",
-            "l_discount",
-            "l_tax",
-            "l_returnflag",
-            "l_linestatus",
-        )
+    pre = li.where(F.col("l_shipdate") <= "1998-09-02 00:00:00").select(
+        "l_quantity",
+        "l_extendedprice",
+        "l_discount",
+        "l_tax",
+        "l_returnflag",
+        "l_linestatus",
     )
     return (
         pre.groupBy("l_returnflag", "l_linestatus")

@@ -35,7 +35,6 @@ from batch_processing_new_spark.functions.text_funcs import (
     tokens,
 )
 from batch_processing_new_spark.sources.readers import (
-    fan_out,
     load_table,
     load_vectors,
     pin_before_sort,
@@ -133,7 +132,7 @@ def bm25_scored(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("text").isNotNull()
     )
     toks = tokens(F.col("text"))
-    base = fan_out(d.select("doc_id", toks.alias("toks")))
+    base = d.select("doc_id", toks.alias("toks"))
     q_terms = list(BM25_QUERY)
 
     def tf_of(term: str) -> Column:
@@ -303,7 +302,7 @@ def q142_quality_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
     # pin the scoring fold (q99 pattern): range sampling would run the
     # narrow hash-bucket/sigmoid chain twice
     return pin_before_sort(
-        fan_out(d.select("doc_id", "text")).select(
+        d.select(
             "doc_id",
             F.round(p, 6).alias("p_good"),
             F.when(p > 0.5, 1).otherwise(0).alias("keep"),
@@ -416,7 +415,7 @@ def q151_hybrid_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
         _f64("embedding").alias("qv")
     ).withColumn("nq", F.sqrt(dot(F.col("qv"), F.col("qv"))))
     cos = (
-        fan_out(e.select(F.col("vec_id").alias("doc_id"), "embedding"))
+        e.select(F.col("vec_id").alias("doc_id"), "embedding")
         .select(
             "doc_id",
             _f64("embedding").alias("cv"),
@@ -555,7 +554,7 @@ def q179_calibration_table(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("text").isNotNull()
     )
     p = F.round(_cls_p_good(F.col("text")), 6)
-    scored = fan_out(d.select("doc_id", "text", "n_chars")).select(
+    scored = d.select(
         p.alias("p"),
         F.when(F.expr(_CAL_LABEL_SQL), 1).otherwise(0).alias("label"),
     )

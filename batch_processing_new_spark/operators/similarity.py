@@ -31,12 +31,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from batch_processing_new_spark.registry import query
-from batch_processing_new_spark.sources.readers import (
-    FANOUT_PY_TASK_BYTES,
-    fan_out,
-    load_table,
-    load_vectors,
-)
+from batch_processing_new_spark.sources.readers import load_vectors
 
 DIM = 64
 TOPK = 10
@@ -124,7 +119,7 @@ def q40_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     q = e.where(F.col("vec_id") < N_QUERIES).select(
         F.col("vec_id").alias("query_id"), _f64("embedding").alias("qv")
     ).withColumn("nq", F.sqrt(dot(F.col("qv"), F.col("qv"))))
-    c = fan_out(e).select(
+    c = e.select(
         F.col("vec_id").alias("neighbor_id"), _f64("embedding").alias("cv")
     ).withColumn("nc", F.sqrt(dot(F.col("cv"), F.col("cv"))))
     scored = (
@@ -304,10 +299,10 @@ def ann_lsh_topk(
     # carry no vectors, so the bucket join + distinct shuffle narrow
     # (query_id, neighbor_id) rows instead of 2 x dim doubles each —
     # vectors are re-attached AFTER dedup, once per surviving pair.
-    # NO fan_out here: the signature is an Arrow pandas UDF, and one
-    # 2000-row batch beats 32 sixty-row batches (per-task Python worker
+    # the signature scan is not spread: it is an Arrow pandas UDF, and
+    # one 2000-row batch beats many small ones (per-task Python worker
     # + Arrow round-trip overhead outweighs the parallelism on a corpus
-    # this small; real corpora arrive multi-partition anyway).
+    # this small).
     sig = emb.select(
         "vec_id", _signature_np(planes)("embedding").alias("sig_full")
     )
@@ -363,14 +358,8 @@ def ann_lsh_topk(
     qv = emb.where(F.col("vec_id") < n_queries).select(
         F.col("vec_id").alias("query_id"), _f64("embedding").alias("qv")
     ).withColumn("nq", F.sqrt(dot(F.col("qv"), F.col("qv"))))
-    # fan_out the re-rank scan: the exact-cosine dots over candidate
-    # pairs are interpreted HOF folds (the expensive per-row work), and
-    # a single-row-group corpus file would run them all on one task;
-    # coarse slices — the chain is cheap per byte relative to the text
-    # band (no-op at scale, like every fan_out)
     cand = (
-        fan_out(emb, task_bytes=FANOUT_PY_TASK_BYTES)
-        .join(F.broadcast(pairs), emb["vec_id"] == pairs["neighbor_id"])
+        emb.join(F.broadcast(pairs), emb["vec_id"] == pairs["neighbor_id"])
         .select("query_id", "neighbor_id", _f64("embedding").alias("cv"))
         .withColumn("nc", F.sqrt(dot(F.col("cv"), F.col("cv"))))
         .join(F.broadcast(qv), "query_id")
@@ -856,8 +845,7 @@ def q93_label_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     e = load_vectors(spark, sf_dir)
     return (
-        fan_out(e.select("label", "embedding"))
-        .select("label", F.posexplode(_f64("embedding")).alias("dim_id", "v"))
+        e.select("label", F.posexplode(_f64("embedding")).alias("dim_id", "v"))
         .groupBy("label", "dim_id")
         # DECIMAL partials (the dsum discipline): a float avg is
         # partition-order-dependent at the ulp, and round(6) cannot
@@ -919,7 +907,7 @@ def q120_int8_quantization(spark: SparkSession, sf_dir: str) -> DataFrame:
     discipline as the revenue aggregates in relational.py.
     """
     e = load_vectors(spark, sf_dir)
-    vals = fan_out(e).select(
+    vals = e.select(
         "vec_id", F.posexplode(_f64("embedding")).alias("dim_id", "x")
     )
     rng = vals.groupBy("dim_id").agg(
@@ -994,7 +982,7 @@ def q145_filtered_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     q = e.where(F.col("vec_id") < N_QUERIES).select(
         F.col("vec_id").alias("query_id"), _f64("embedding").alias("qv")
     ).withColumn("nq", F.sqrt(dot(F.col("qv"), F.col("qv"))))
-    c = fan_out(e.where(F.col("label") % 2 == 0)).select(
+    c = e.where(F.col("label") % 2 == 0).select(
         F.col("vec_id").alias("neighbor_id"), _f64("embedding").alias("cv")
     ).withColumn("nc", F.sqrt(dot(F.col("cv"), F.col("cv"))))
     # per-vector norms (q41 discipline) — bit-identical, 1/3 the folds
@@ -1067,7 +1055,7 @@ def q168_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("label").alias("query_label"),
         _f64("embedding").alias("qv"),
     ).withColumn("nq", F.sqrt(dot(F.col("qv"), F.col("qv"))))
-    c = fan_out(e).select(
+    c = e.select(
         F.col("vec_id").alias("neighbor_id"),
         F.col("label").alias("neighbor_label"),
         _f64("embedding").alias("cv"),
@@ -1153,7 +1141,7 @@ def q176_semantic_decontam(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = e.where(in_eval).select(
         F.col("vec_id").alias("eval_id"), _f64("embedding").alias("evv")
     ).withColumn("ne", F.sqrt(dot(F.col("evv"), F.col("evv"))))
-    corpus = fan_out(e.where(~in_eval)).select(
+    corpus = e.where(~in_eval).select(
         "vec_id", _f64("embedding").alias("cv")
     ).withColumn("nc", F.sqrt(dot(F.col("cv"), F.col("cv"))))
     # per-vector norms (q41 discipline) — bit-identical, 1/3 the folds

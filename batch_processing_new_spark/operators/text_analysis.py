@@ -28,7 +28,6 @@ from batch_processing_new_spark.functions.text_funcs import (
 )
 from batch_processing_new_spark.registry import query
 from batch_processing_new_spark.sources.readers import (
-    fan_out,
     load_table,
     pin_before_sort,
 )
@@ -429,7 +428,7 @@ def q99_unigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents").where(
         F.col("text").isNotNull()
     )
-    tok = fan_out(d.select("text")).select(
+    tok = d.select(
         F.explode(tokens(F.col("text"))).alias("t")
     )
     # vocab-sized counts materialized ONCE (two consumers: top-K and
@@ -479,7 +478,7 @@ def q99_unigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
     # scan; unpinned, the presentation sort's range sampling re-executes
     # it (measured ~0.6 s + 11 s duplicate stage pair at sf0.1)
     return pin_before_sort(
-        fan_out(d.select("doc_id", "text")).select(
+        d.select(
             "doc_id",
             F.size(toks).alias("n_tokens"),
             F.round(nlp_sum / F.size(toks), 6).alias("avg_neg_logprob"),
@@ -686,7 +685,7 @@ def q110_inverted_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     right plan.
     """
     d = load_table(spark, sf_dir, "documents")
-    t = fan_out(d.select("doc_id", "text")).select(
+    t = d.select(
         "doc_id", F.explode(distinct_tokens(F.col("text"))).alias("term")
     )
     return (
@@ -757,7 +756,7 @@ def q119_vocab_oov(spark: SparkSession, sf_dir: str) -> DataFrame:
         lambda x, y: F.concat_ws(" ", x, y),
     )
     bg = (
-        fan_out(d.select("doc_id", "text"))
+        d.select("doc_id", "text")
         .where(F.size(tokens(F.col("text"))) >= 2)
         .select("doc_id", F.explode(bigrams).alias("bigram"))
         .localCheckpoint(eager=False)
@@ -868,7 +867,7 @@ def q127_byte_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
         # range sampling pass otherwise runs the whole mapInArrow
         # entropy pass twice (r12 pin audit, FLAG-python)
         pin_before_sort(
-            fan_out(d.select("doc_id", "text").where(F.length("text") > 0))
+            d.select("doc_id", "text").where(F.length("text") > 0)
             .mapInArrow(
                 run, schema="doc_id bigint, n_bytes int, entropy_bits double"
             )
@@ -924,7 +923,7 @@ def q132_winnowing_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
     the fingerprint table on fp — the same inverted-index shape as q35.
     """
     d = load_table(spark, sf_dir, "documents")
-    return winnow_fingerprints(fan_out(d.select("doc_id", "text"))).orderBy(
+    return winnow_fingerprints(d.select("doc_id", "text")).orderBy(
         "doc_id", "fp"
     )
 
@@ -1023,7 +1022,7 @@ def q138_unicode_nfc(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     d = load_table(spark, sf_dir, "documents")
     raw = F.concat(F.trim(F.col("text")), F.lit(_NFC_MIX))
-    out = fan_out(d.select("doc_id", raw.alias("raw"))).select(
+    out = d.select("doc_id", raw.alias("raw")).select(
         "doc_id", "raw", nfc("raw").alias("text_nfc")
     )
     # pin the Arrow normalize pass ahead of the presentation sort: the
@@ -1093,7 +1092,7 @@ def q152_chunk_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents").where(
         F.col("text").isNotNull()
     )
-    toked = fan_out(d.select("doc_id", "text")).select(
+    toked = d.select(
         "doc_id", tokens(F.col("text")).alias("_toks")
     )
     toks = F.col("_toks")
@@ -1178,7 +1177,7 @@ def q195_lexicon_sentiment(spark: SparkSession, sf_dir: str) -> DataFrame:
         "term string, weight int",
     )
     toks = tokens(F.col("text"))
-    tok = fan_out(d.select("doc_id", "source", "text")).select(
+    tok = d.select(
         "doc_id",
         "source",
         F.size(toks).alias("n"),

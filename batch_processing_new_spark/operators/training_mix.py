@@ -107,7 +107,9 @@ def q95_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
     # shingles_of IS the gram builder (identical output to the removed
     # local _grams for every array size) — one shingle implementation
-    # repo-wide, so dedup and decontamination can't drift apart
+    # repo-wide, so dedup and decontamination can't drift apart.
+    # fan_out pays here: the shingle chain on 4 tasks beat one row group
+    # in 9-10/10 rounds (per-site A/B, TUNING.md "Scan-stage parallelism")
     grams = (
         fan_out(d.select("doc_id", "text"))
         .where(F.col("text").isNotNull())
@@ -230,10 +232,7 @@ def q98_token_budget_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     d = load_table(spark, sf_dir, "documents")
     h = salted_hash60("mix", F.col("doc_id"))
-    # fan_out: the tokenize+size projection is the expression-heavy
-    # part — without it a small-row-group input runs the whole scan on
-    # one task (the measured 2.6x pattern q95 guards against)
-    sized = fan_out(d).select(
+    sized = d.select(
         "doc_id",
         "source",
         F.size(tokens(F.col("text"))).alias("tok_count"),
@@ -295,9 +294,7 @@ def pack_sequences(
         StructType,
     )
 
-    # fan_out before the tokenize+size projection (the q95/q178
-    # single-task-scan guard); the shard shuffle follows anyway
-    sized = fan_out(docs).select(
+    sized = docs.select(
         "doc_id",
         F.size(tokens(F.col("text"))).alias("tok_count"),
         F.pmod(
@@ -474,7 +471,7 @@ def q112_seeded_shuffle_shard(spark: SparkSession, sf_dir: str) -> DataFrame:
     # data-sized range width (adaptive_width): pos is the TOTAL
     # (h, doc_id) order, so shard assignment is width-independent —
     # width only sets parallelism, and core-count ranges over a tiny
-    # input pay ~cores x the per-task overhead (the fan_out finding).
+    # input pay ~cores x the per-task fixed overhead.
     # Cap stays the old max(cores, N_SHARDS) so large inputs keep
     # full-width ranges.
     n_part = min(
@@ -653,7 +650,7 @@ def q178_length_bucket_packing(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffle of |buckets| rows, no window pass anywhere.
     """
     d = load_table(spark, sf_dir, "documents")
-    lens = fan_out(d.select("doc_id", "text")).select(
+    lens = d.select(
         F.size(tokens(F.col("text"))).cast("bigint").alias("n_tok")
     )
     bucketed = lens.withColumn(

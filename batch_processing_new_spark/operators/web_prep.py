@@ -26,7 +26,6 @@ from pyspark.sql import functions as F
 
 from batch_processing_new_spark.registry import query
 from batch_processing_new_spark.sources.readers import (
-    fan_out,
     load_table,
     pin_before_sort,
 )
@@ -244,7 +243,7 @@ def q140_boilerplate_strip(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.concat(F.lit("(c) 2024 "), F.col("source"), F.lit(" all rights reserved")),
     )
     lines = (
-        fan_out(d.select("doc_id", "source", lines_arr.alias("lines")))
+        d.select("doc_id", "source", lines_arr.alias("lines"))
         .select(
             "doc_id",
             "source",

@@ -283,135 +283,60 @@ def read_evolved_parquet(spark: SparkSession, path: str) -> DataFrame:
     return spark.read.option("mergeSchema", "true").parquet(path)
 
 
-#: fan_out sizing: estimated plan bytes per spread task. Calibrated by
-#: measurement at sf0.1 (TUNING.md, "Scan-stage parallelism"): per-task
-#: fixed cost on this class of host is ~15-20 ms of scheduling plus
-#: ~100-500 ms of executor run overhead, so tiny inputs must NOT be cut
-#: into core-count slivers — a 0.25 MiB projection in 32 tasks spends
-#: ~30x more wall in per-task overhead than in its own expression work.
-#: It only shapes SMALL inputs: at 100 TB every scan already has
-#: >= cores partitions and fan_out no-ops entirely.
+#: fan_out / adaptive_width sizing: estimated plan bytes per spread
+#: task. Every task pays a fixed scheduling and executor cost, so a
+#: small input is cut into slices of this size rather than into
+#: core-count slivers (TUNING.md, "Scan-stage parallelism").
 FANOUT_TASK_BYTES = 32768
 
 
-#: Width-decision cache keyed on the ANALYZED plan's semanticHash (plus
-#: the sizing knobs): fan_out / adaptive_width probe the Catalyst size
-#: estimate and the source RDD's partition count, which costs a full
-#: optimize + physical-planning pass per call — per-query CONSTRUCTION
-#: latency paid by every driver on every run (measured round 12:
-#: ~30-90 ms per fan_out site on the bench host). The analyzed plan
-#: already exists (Datasets analyze eagerly), so the hash is one cheap
-#: JVM call, and two semantically-equal plans get equal widths — the
-#: correct outcome, since values are width-independent everywhere by
-#: the engine's determinism discipline (tools/determinism_check.py).
-#: Caches a partitioning DECISION, never data or results; process-local.
-#: A file replaced under the same path can leave a stale entry; that
-#: changes only the partitioning, never a value, so entries carry no
-#: file fingerprint (unlike _SCHEMA_CACHE).
-_WIDTH_CACHE: dict[tuple, tuple[int, int]] = {}
+def fan_out(df: DataFrame) -> DataFrame:
+    """Spread a small scan across cores before an expression-heavy
+    narrow stage, sized by data and capped by cores.
 
+    A scan's parallelism is bounded by parquet row groups, so a
+    one-row-group file runs its whole downstream expression chain on
+    one task. This pays one exchange of the projected columns to
+    ``adaptive_width`` tasks, and is the identity when the scan already
+    has that many partitions. Values are width-independent
+    (tools/determinism_check.py).
 
-def _plan_key(df: DataFrame, *knobs) -> tuple | None:
-    try:
-        return (
-            df._jdf.queryExecution().analyzed().semanticHash(),
-            *knobs,
-        )
-    except Exception:
-        return None  # non-classic backend: fall back to live probing
-
-
-def fan_out(df: DataFrame, task_bytes: int | None = None) -> DataFrame:
-    """Spread a small-file scan across cores before an expression-heavy
-    narrow stage — sized by DATA, capped by cores.
-
-    Spark chains projections/explodes into the scan stage, and a scan's
-    parallelism is bounded by parquet row groups — a single-row-group
-    file runs its whole downstream expression chain on ONE task no
-    matter how many cores exist (measured 2.6x on the shingle stage at
-    sf0.1). This helper pays one tiny exchange (the projected columns
-    only) to unlock execution width.
-
-    Width is ``ceil(estimated plan bytes / FANOUT_TASK_BYTES)`` capped
-    at ``defaultParallelism`` (guide §2: derive partitioning
-    from input size, never a core-count constant): a hard
-    ``repartition(cores)`` is an AQE-opaque user shuffle, and at small
-    inputs it pays ~cores x the per-task fixed overhead for microscopic
-    slices (measured at sf0.1: the q37 shingle stage at 32 fixed tasks
-    ran 2.3x slower than data-sized width; a warm no-op Python stage
-    costs 0.37 s at 2 tasks vs 0.85 s at 32). No-op when the scan
-    already has enough partitions — at 100 TB real inputs have
-    thousands of row groups and this never fires; it's the small-input
-    guard, so the knob only tunes small-input behavior. Values are
-    width-independent everywhere by the engine's determinism discipline
-    (tools/determinism_check.py runs every query at two partitionings).
-
-    ``task_bytes`` overrides the default slice size per call site:
-    Python-kernel consumers (mapInPandas/pandas UDF over vectors) pay a
-    far higher per-task boundary cost than JVM expression chains, so
-    they pass a coarser slice (measured sweep, TUNING.md "Retired
-    one-shot tools": q113's Lloyd passes run ~35 percent faster at
-    128 KiB/task than at the 32 KiB text default; the text band
-    inverts).
+    The exchange and the size probe are a fixed cost per query. On a
+    4-core host at sf0.1 a per-site A/B (TUNING.md) kept the wrapper
+    only where the query was faster with it in at least 9 of 10 rounds
+    by more than its spread: q83's n-gram stage and q95's shingle
+    stage. Wrap a new site only on the same evidence.
     """
-    key = _plan_key(
-        df,
-        "fan_out",
-        df.sparkSession.sparkContext.defaultParallelism,
-        task_bytes,
-    )
-    hit = _WIDTH_CACHE.get(key) if key is not None else None
-    if hit is None:
-        target = adaptive_width(df, task_bytes=task_bytes)
-        # _jdf.rdd(), not df.rdd: the Python RDD wrapper adds a
-        # serializer handshake on top of the same physical planning
-        src = df._jdf.rdd().getNumPartitions()
-        if key is not None:
-            _WIDTH_CACHE[key] = (target, src)
-    else:
-        target, src = hit
-    if src < target:
+    target = adaptive_width(df)
+    # _jdf.rdd(), not df.rdd: the Python RDD wrapper adds a serializer
+    # handshake on top of the same physical planning
+    if df._jdf.rdd().getNumPartitions() < target:
         return df.repartition(target)
     return df
 
 
 def adaptive_width(
-    df: DataFrame,
-    multiple: int = 1,
-    task_bytes: int | None = None,
-    floor: int = 1,
+    df: DataFrame, multiple: int = 1, task_bytes: int | None = None
 ) -> int:
     """Data-derived partition count: ``ceil(estimated plan bytes /
-    task_bytes)`` clamped to ``[floor, defaultParallelism * multiple]``.
-    Shared by fan_out and the explicit repartition sites (q112's range
-    shard) so every small-input width decision uses one rule. Falls
-    back to the core-count cap when Catalyst has no estimate (RDD-backed
-    plans report Long.Max)."""
-    sc = df.sparkSession.sparkContext
-    cap = sc.defaultParallelism * multiple
+    task_bytes)`` clamped to ``[1, defaultParallelism * multiple]``.
+    Shared by fan_out and q112's range shard so every small-input width
+    decision uses one rule. Falls back to the cap when Catalyst has no
+    estimate (RDD-backed plans report Long.MaxValue)."""
+    cap = df.sparkSession.sparkContext.defaultParallelism * multiple
     per_task = task_bytes or FANOUT_TASK_BYTES
-    # cap is part of the key: sessions with different core counts in
-    # one process (tests) must not share width decisions
-    key = _plan_key(df, "width", cap, per_task, floor)
-    hit = _WIDTH_CACHE.get(key) if key is not None else None
-    if hit is not None:
-        return hit[0]
     try:
         est = int(str(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()))
     except Exception:
         est = -1
     if est < 0 or est >= (1 << 62):
-        width = max(floor, cap)  # no/degenerate estimate: previous behavior
-    else:
-        width = max(floor, min(cap, -(-est // per_task)))
-    if key is not None:
-        _WIDTH_CACHE[key] = (width, -1)
-    return width
+        return cap
+    return max(1, min(cap, -(-est // per_task)))
 
 
-#: Python-kernel fan_out slice (see fan_out docstring): coarser than the
-#: JVM-expression default because each Python task pays the worker
-#: handshake + Arrow round-trip regardless of slice size.
+#: Coarser slice for q112's range shard (``adaptive_width``): its
+#: per-row work is light, so each task must cover more bytes before it
+#: outweighs the task's fixed cost.
 FANOUT_PY_TASK_BYTES = 131072
 
 

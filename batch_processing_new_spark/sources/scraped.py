@@ -36,7 +36,6 @@ from pyspark.sql import types as T
 
 from batch_processing_new_spark.registry import query
 from batch_processing_new_spark.sources.readers import (
-    fan_out,
     load_table,
     pin_before_sort,
 )
@@ -178,7 +177,7 @@ def q136_scraped_html(spark: SparkSession, sf_dir: str) -> DataFrame:
     # oracle's fixed-template concat would keep a double space — a
     # latent divergence with no meaningful parse to compare
     d = d.where(F.trim(F.col("text")) != "")
-    pages = synth_html_pages(fan_out(d.select("doc_id", "source", "text")))
+    pages = synth_html_pages(d.select("doc_id", "source", "text"))
     # pin the HTML-parser Python pass ahead of the presentation sort:
     # the range sampling otherwise runs it twice (r12 pin audit)
     return pin_before_sort(parse_html(pages)).orderBy("doc_id")
@@ -258,7 +257,7 @@ def q137_tweet_parse(spark: SparkSession, sf_dir: str) -> DataFrame:
     author object, entity array, timestamp formatting) shows up as a
     value mismatch."""
     e = load_table(spark, sf_dir, "events")
-    raw = synth_tweet_json(fan_out(e))
+    raw = synth_tweet_json(e)
     t = raw.select(F.from_json("raw", TWEET_SCHEMA).alias("t")).select("t.*")
     return t.select(
         F.col("id").alias("tweet_id"),

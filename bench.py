@@ -16,7 +16,6 @@ query is timed once after a warm-up of the input file footer reads.
 
 from __future__ import annotations
 
-import gc
 import json
 import os
 import sys
@@ -118,16 +117,6 @@ def main() -> None:
         # misses, GC) — the min is the reproducible figure.
         for _ in range(2):
             run_all(fn(spark, SF_DIR))
-        # free the warm-up run's handles AND its localCheckpoint blocks
-        # BEFORE timing (see the boundary-GC comment below) — the
-        # warm-up run of a checkpoint-heavy query otherwise gets its
-        # blocks cleaned in the middle of that query's own timed runs
-        gc.collect()
-        try:
-            spark._jvm.System.gc()
-        except Exception:
-            pass
-        time.sleep(0.5)
         n = fn(spark, SF_DIR).count()  # report-only, untimed
         best = float("inf")
         for _ in range(3):
@@ -136,29 +125,6 @@ def main() -> None:
             best = min(best, time.perf_counter() - t0)
         timings[name] = round(best, 3)
         print(f"# {name}: {timings[name]:.3f}s ({n} rows)", file=sys.stderr)
-        # Collect garbage at the query boundary, while no stage is
-        # running. Otherwise Python GC can free earlier queries' py4j
-        # DataFrame/QueryExecution handles MID-STAGE of a later query;
-        # the JVM ContextCleaner then deregisters their metric
-        # accumulators while straggler task-completion events are still
-        # flushing updates, and the DAGScheduler logs a harmless but
-        # alarming "attempted to access non-existent accumulator" stack
-        # trace into the bench tail (seen in BENCH_r01.json between q30
-        # and q37; rc stayed 0 and all rows/timings were unaffected).
-        #
-        # Then force a JVM GC and let the ContextCleaner drain: the
-        # localCheckpoint blocks of checkpoint-heavy queries (q37's
-        # shingle arrays) are otherwise removed asynchronously DURING
-        # the next query's timed runs, and the block-manager removals
-        # steal 1.5-3 s from whichever query they land on (measured:
-        # q37/q42 traded a 3-4 s outlier across bench runs; with the
-        # boundary GC both sit at their isolated-run times).
-        gc.collect()
-        try:
-            spark._jvm.System.gc()
-        except Exception:
-            pass
-        time.sleep(0.5)
 
     total = round(sum(timings.values()), 3)
 
